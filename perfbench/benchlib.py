@@ -26,6 +26,8 @@ def percentile(values, p):
 def summary(values, cap):
     """Sample count, median, and the highest percentile (at most `cap`)
     with ten samples beyond it, or the maximum when there is none."""
+    if not values:
+        return {"n": 0, "p50": None, "tail_percentile": None, "tail": None}
     pct = tail_percentile(len(values), cap)
     return {"n": len(values), "p50": percentile(values, 50),
             "tail_percentile": pct if pct else 100.0,

@@ -2,17 +2,21 @@
 """Regenerates perfbench/expected/keys.tsv: the reference time, memo tags
 and expected digest of every SparkEntry key at sf0.1.
 
-    python3 perfbench/make_expected.py [--data DIR] [--check-cpus 2]
+    python3 perfbench/make_expected.py [--data DIR]
 
 Run from the root of a graft checkout, at the commit whose outputs the
 benchmark should expect. Steps:
  1. a sweep of every key at local[nproc] records its digest, writes its
     result as parquet and the key's oracle SQL;
  2. tools/compare.py (read-only) checks each written result against
-    the DuckDB oracle; the digest of the re-read parquet must equal
-    the direct digest, so the pinned digest is the oracle-checked rows;
- 3. a second sweep at local[--check-cpus] must reproduce every digest.
+    the DuckDB oracle, one key at a time for at most ORACLE_TIMEOUT_S
+    (status `oracle-timeout` past it); the digest of the re-read
+    parquet must equal the direct digest, so the pinned digest is the
+    oracle-checked rows;
+ 3. a second sweep at local[2] must reproduce every digest.
 Keys without oracle SQL (OMIT) are pinned as this commit computes them.
+Keys reading a memo that adhoc leaves out (metrics.ADHOC_EXCLUDED_MEMOS)
+are never sampled and stay `unchecked`, except dedup's consumer keys.
 The status column says which check each key passed; only `oracle` and
 `omit` keys are sampled by the adhoc workload.
 """
@@ -25,6 +29,7 @@ import subprocess
 import sys
 
 HERE = os.path.dirname(os.path.abspath(__file__))
+ORACLE_TIMEOUT_S = 600
 sys.path.insert(0, HERE)
 import metrics  # noqa: E402
 import run  # noqa: E402
@@ -54,14 +59,24 @@ def read_sweep(tsv):
 
 
 def oracle_verdicts(data, dump, keys):
-    """tools/compare.py's verdict per key: PASS, VALS, ROWS, ..."""
-    r = subprocess.run([sys.executable, os.path.join("tools", "compare.py"), data, dump]
-                       + sorted(keys), capture_output=True, text=True)
+    """tools/compare.py's verdict per key: PASS, VALS, ROWS, ..., or
+    TIMEOUT when DuckDB does not finish the key's oracle within
+    ORACLE_TIMEOUT_S (a few oracles take longer than all others
+    together). dedup's consumer keys have no limit: dedup relies on
+    their digests being oracle-checked."""
     verdict = {}
-    for line in r.stdout.splitlines():
-        m = re.match(r"^([A-Z]+)\s+(\S+?):?\s", line)
-        if m:
-            verdict[m.group(2)] = m.group(1)
+    for key in sorted(keys):
+        limit = None if key in DEDUP_CONSUMERS else ORACLE_TIMEOUT_S
+        try:
+            r = subprocess.run([sys.executable, os.path.join("tools", "compare.py"), data,
+                                dump, key], capture_output=True, text=True, timeout=limit)
+            for line in r.stdout.splitlines():
+                m = re.match(r"^([A-Z]+)\s+(\S+?):?\s", line)
+                if m:
+                    verdict[m.group(2)] = m.group(1)
+        except subprocess.TimeoutExpired:
+            verdict[key] = "TIMEOUT"
+        print(f"[oracle] {verdict.get(key, 'NONE'):8s} {key}", file=sys.stderr, flush=True)
     return verdict
 
 
@@ -94,7 +109,6 @@ def write(first, verdict, second, oracle_keys, checked):
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--data", default=os.environ.get("GRAFT_BENCH_DATA", metrics.DEFAULT_DATA))
-    ap.add_argument("--check-cpus", type=int, default=2)
     ap.add_argument("--work", default=os.path.join(".bench_build", "expected"))
     a = ap.parse_args()
     jars = run.spark_jars()
@@ -105,14 +119,15 @@ def main():
     first = sweep(classes, jars, a.data, os.cpu_count(), os.path.join(work, "1"), dump)
     with open(os.path.join(dump, "oracle_sql.json")) as fh:
         oracle_keys = set(json.load(fh))
-    # the near-dup pair consumers are only checked where the benchmark
-    # reads their digests (dedup's consumer keys): their DuckDB oracles
-    # are quadratic CTEs that take far longer than the rest together
-    keys = dict((k, {"status": "omit", "tags": [t for t in v[3].split(",") if t],
-                     "ref_s": float(v[0])}) for k, v in first.items())
-    wanted = (set(metrics.adhoc_pool(keys)) | set(DEDUP_CONSUMERS)) & oracle_keys
+    # keys reading the excluded memos are never sampled; among them are
+    # the near-dup pair consumers, whose DuckDB oracles are quadratic CTEs
+    # that take far longer than the rest together. dedup's consumer keys
+    # are checked all the same: dedup compares their digests on seed 0
+    no_excluded_memo = {k for k, v in first.items()
+               if not metrics.ADHOC_EXCLUDED_MEMOS.intersection(v[3].split(","))}
+    wanted = (no_excluded_memo | set(DEDUP_CONSUMERS)) & oracle_keys
     verdict = oracle_verdicts(a.data, dump, wanted)
-    second = sweep(classes, jars, a.data, a.check_cpus, os.path.join(work, "2"))
+    second = sweep(classes, jars, a.data, 2, os.path.join(work, "2"))
     print("wrote", write(first, verdict, second, oracle_keys, wanted))
 
 

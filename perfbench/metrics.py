@@ -163,12 +163,15 @@ def _listen(raw, report, e2e, layers):
         report["listen_backfill_eps"] = eps
         report["backfill"] = {k: bf[k] for k in ("events", "wall_s", "batches", "blocks")}
         e2e["throughput_per_s"] = (eps, "1/s")
-    if live:
+    prog = B.measured(live) if live else []
+    if live and not prog and not any(f["name"] == "live" for f in raw["failures"]):
+        _wrong(raw, "live", "no measured block was committed")
+    if prog:
         lat = B.summary(B.event_latencies(live), 99)
-        report["listen_latency_ms"] = dict(lat, batches=len(B.measured(live)))
+        report["listen_latency_ms"] = dict(lat, batches=len(prog))
+        report["listen_state_stores"] = prog[-1].get("state_parts")
         e2e["latency_ms"] = (lat["p50"], "ms")
         series = B.backlog_series(live)
-        prog = B.measured(live)
 
         def dur(k):
             return B.median([p["durations"].get(k, 0) for p in prog])
@@ -185,8 +188,8 @@ def _listen(raw, report, e2e, layers):
             "listen.addBatch_ms": (dur("addBatch"), "ms"),
             "listen.walCommit_ms": (dur("walCommit"), "ms"),
             "listen.commitOffsets_ms": (dur("commitOffsets"), "ms"),
-            "listen.state_rows": (float(prog[-1]["state_rows"]) if prog else 0.0, "count"),
-            "listen.state_mb": (prog[-1]["state_bytes"] / 2**20 if prog else 0.0, "MB"),
+            "listen.state_rows": (float(prog[-1]["state_rows"]), "count"),
+            "listen.state_mb": (prog[-1]["state_bytes"] / 2**20, "MB"),
             "listen.state_commit_ms": (B.median([p["state_commit_ms"] for p in prog]), "ms"),
         })
         if raw.get("spans"):
@@ -285,8 +288,7 @@ def _dedup(raw, report, e2e, layers):
     })
     spans = raw.get("spans")
     if spans:
-        root = [s for s in spans if s["name"] == "dedup"][0]
-        ids = B.subtree(spans, root["id"])
+        ids = set().union(*(B.subtree(spans, s["id"]) for s in spans if s["name"] == "dedup"))
         cc = [s["id"] for s in spans if s["name"] == "components"]
         layers["dedup.cc_jobs"] = (B.rollup(spans, B.subtree(spans, cc[0]) if cc else set(),
                                             "jobs"), "count")

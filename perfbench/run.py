@@ -20,6 +20,7 @@ import shutil
 import subprocess
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import benchlib  # noqa: E402
@@ -144,24 +145,19 @@ def main():
     raw_path = os.path.join(workdir, "raw.json")
     kv = {"workload": a.workload, "seed": a.seed, "seconds": a.seconds, "trace": a.trace,
           "cpus": nproc, "work": workdir, "out": raw_path}
+    report, e2e, layers = {}, {}, {}
+    rc = None
     try:
         kv.update(M.prepare(a.workload, a.seed, workdir))
         rc = jvm(classes, jars, workdir, kv)
-        if not os.path.exists(raw_path):
-            with open(os.path.join(workdir, "jvm.log")) as fh:
-                print(fh.read()[-3000:], file=sys.stderr)
-            die(f"benchmark JVM produced no result (exit {rc})")
-        with open(raw_path) as fh:
-            raw = json.load(fh)
-        report, e2e, layers = M.compute(a.workload, raw, dict(kv, classes=classes))
-        report["build_s"] = build_s
-        results = os.path.join(root, ".bench_build", "results")
-        os.makedirs(results, exist_ok=True)
-        with open(os.path.join(results, f"{tag}.json"), "w") as fh:
-            json.dump({"report": report, "raw": raw}, fh)
-        if a.trace:
-            M.write_spans(raw, os.path.join(results, f"{tag}.spans.jsonl"))
-            report["tracing_overhead"] = M.overhead(results, a.workload, a.seed, e2e)
+        if os.path.exists(raw_path):
+            with open(raw_path) as fh:
+                raw = json.load(fh)
+            report, e2e, layers = summarize(a, raw, dict(kv, classes=classes), root, tag)
+            report["build_s"] = build_s
+        else:
+            raw = jvm_failure(workdir, rc)
+            report["failures"] = raw["failures"]
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
@@ -175,6 +171,39 @@ def main():
             "metrics": {k: {"value": v, "unit": u} for k, (v, u) in chosen.items()}}
     print(json.dumps(line))
     sys.exit(0 if line["correct"] and rc == 0 else 1)
+
+
+def jvm_failure(workdir, rc):
+    """The raw result of a JVM that timed out or died before writing one."""
+    with open(os.path.join(workdir, "jvm.log")) as fh:
+        print(fh.read()[-3000:], file=sys.stderr)
+    why = (f"timed out after {JVM_TIMEOUT_S} s" if rc is None
+           else f"exited with code {rc} without a result")
+    print(f"perfbench: benchmark JVM {why}", file=sys.stderr)
+    return {"ok": False, "attempted": 1, "failed": 1,
+            "failures": [{"name": "jvm", "error": why}]}
+
+
+def summarize(a, raw, kv, root, tag):
+    """Report and metrics of a raw result; the results file, and in a
+    traced run the spans and the tracing overhead."""
+    try:
+        report, e2e, layers = M.compute(a.workload, raw, kv)
+    except Exception as e:
+        # a run that failed part-way can leave a result the metrics do
+        # not cover: name it as a failure instead of stopping
+        traceback.print_exc()
+        raw["failed"] = int(raw["failed"]) + 1
+        raw["failures"].append({"name": "metrics", "error": repr(e)})
+        return {"failures": raw["failures"]}, {}, {}
+    results = os.path.join(root, ".bench_build", "results")
+    os.makedirs(results, exist_ok=True)
+    with open(os.path.join(results, f"{tag}.json"), "w") as fh:
+        json.dump({"report": report, "raw": raw}, fh)
+    if a.trace:
+        M.write_spans(raw, os.path.join(results, f"{tag}.spans.jsonl"))
+        report["tracing_overhead"] = M.overhead(results, a.workload, a.seed, e2e)
+    return report, e2e, layers
 
 
 if __name__ == "__main__":

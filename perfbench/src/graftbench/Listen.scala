@@ -56,22 +56,20 @@ object Listen {
     col("tokenWhole").cast(LongType).as("tokenWhole"), col("burnCount"),
     unix_micros(col("blockTs")).as("blockTsUs"))
 
-  /** State stores of the dedup, as many as graft's own streaming keys
-    * use (StreamOps.withBoundedStatePartitions); fixed in the checkpoint
-    * at the first start. */
-  val statePartitions: Int = 2
-
+  /** The dedup gets as many state stores as graft's own streaming keys
+    * (the engine's cap, applied while the query starts); the count is
+    * fixed in the checkpoint at the first start. */
   private def start(spark: SparkSession, endBlock: Long, perTrigger: Long,
-                    trigger: Trigger, sink: String, ckpt: String): StreamingQuery = {
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    toSink(decoded(source(spark, endBlock, perTrigger, stream = true))
-        .withWatermark("blockTs", "10 minutes")
-        .dropDuplicatesWithinWatermark("transactionHash", "logIndex"))
-      .writeStream.format("graft.sinks.StagedCommitSink")
-      .option("path", sink).option("checkpointLocation", ckpt)
-      .trigger(trigger)
-      .start()
-  }
+                    trigger: Trigger, sink: String, ckpt: String): StreamingQuery =
+    graft.streaming.BenchStateParts(spark) {
+      toSink(decoded(source(spark, endBlock, perTrigger, stream = true))
+          .withWatermark("blockTs", "10 minutes")
+          .dropDuplicatesWithinWatermark("transactionHash", "logIndex"))
+        .writeStream.format("graft.sinks.StagedCommitSink")
+        .option("path", sink).option("checkpointLocation", ckpt)
+        .trigger(trigger)
+        .start()
+    }
 
   private def progressJson(p: StreamingQueryProgress): Map[String, Any] = {
     val src = p.sources.headOption
@@ -85,7 +83,8 @@ object Listen {
       "durations" -> p.durationMs.asScala.map { case (k, v) => k -> v.longValue() }.toMap,
       "state_rows" -> state.map(_.numRowsTotal).getOrElse(0L),
       "state_bytes" -> state.map(_.memoryUsedBytes).getOrElse(0L),
-      "state_commit_ms" -> state.map(_.commitTimeMs).getOrElse(0L))
+      "state_commit_ms" -> state.map(_.commitTimeMs).getOrElse(0L),
+      "state_parts" -> state.map(_.numShufflePartitions).getOrElse(0L))
   }
 
   /** Drains blocks [0, backlogBlocks) with AvailableNow; returns

@@ -46,7 +46,8 @@ final class Ctx(val args: Map[String, String]) {
   val dataDir: String = args.getOrElse("data", "")
   val workDir: String = args("work")
   val out: String = args("out")
-  val setupReps: Int = args.getOrElse("setup_reps", "3").toInt
+  /** Set-ups per run; `setup_s` is their median. */
+  val setupReps: Int = 3
 
   /** JVM start, epoch ms; start-up is reported apart from set-up. */
   val jvmStartMs: Double =

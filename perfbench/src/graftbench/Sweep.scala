@@ -38,12 +38,9 @@ object Sweep {
         rddsByGroup.getOrElseUpdate(g, mutable.Set()) ++= e.stageInfo.rddInfos.map(_.id)
       }
     })
-    val only = ctx.args.get("only").map(_.split(",").toSet)
     val dump = ctx.args.get("dump")
     val lines = mutable.ArrayBuffer[String]()
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .foreach { case (key, fn) =>
+    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (key, fn) =>
         sc.setJobGroup(key, key)
         val t0 = System.nanoTime()
         val res = scala.util.Try(Digest.of(fn(spark, d)))

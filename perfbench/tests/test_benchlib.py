@@ -108,6 +108,31 @@ class ListenerMath(unittest.TestCase):
         self.assertGreater(B.backlog_growth(B.backlog_series(live)), 1.0)
 
 
+class FailedLivePhase(unittest.TestCase):
+    """A live phase that committed no measured batch yields no latency
+    and no crash, and the run is counted as failed."""
+
+    def compute(self, failures):
+        import metrics as M
+        raw = {"meta": {"nproc": 4}, "attempted": 2, "failed": len(failures),
+               "failures": failures, "peak_rss_mb": 1.0,
+               "backfill": {"events": 10, "wall_s": 1.0, "batches": 1, "blocks": 4},
+               "live": dict(synthetic_live(), progress=[])}
+        return M.compute("listen", raw, {"seed": 1, "classes": "b/classes-0"})
+
+    def test_thrown_live_phase(self):
+        report, e2e, _ = self.compute([{"name": "live", "error": "boom"}])
+        self.assertNotIn("latency_ms", e2e)
+        self.assertIn("throughput_per_s", e2e)
+        self.assertEqual(report["failed"], 1)
+        self.assertEqual(B.summary([], 99)["n"], 0)
+
+    def test_silent_empty_live_phase_is_wrong(self):
+        report, e2e, _ = self.compute([])
+        self.assertNotIn("latency_ms", e2e)
+        self.assertEqual([f["name"] for f in report["failures"]], ["live"])
+
+
 class Sampling(unittest.TestCase):
     keys = {f"q_{i:03d}": i / 10 for i in range(200)}
     keys.update({f"s_{i:02d}": 1 + i / 10 for i in range(20)})
@@ -165,7 +190,7 @@ class HarnessSelfTest(unittest.TestCase):
         out = os.path.join(work, "raw.json")
         try:
             rc = run.jvm(classes, jars, work, {"workload": "selftest", "cpus": 2,
-                                               "work": work, "out": out, "setup_reps": 1})
+                                               "work": work, "out": out})
             with open(out) as fh:
                 raw = json.load(fh)
         finally:
