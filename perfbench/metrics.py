@@ -19,7 +19,8 @@ ADHOC_MEMOS = ["lsh-index"]
 # 2-14 s per set-up (the pair tables are dedup's)
 ADHOC_EXCLUDED_MEMOS = {"edge-pairs", "edge-labels", "term-index", "media"}
 ADHOC_MAX_PCT = 75          # keys slower than this percentile are left out
-DEDUP_INJECT_SHARE = 0.04   # near-duplicates injected per document, seed != 0
+DEDUP_KEEP_EVERY = 2        # seed != 0 keeps every second sf0.1 document
+DEDUP_INJECT_SHARE = 0.04   # near-duplicates injected per kept document, seed != 0
 WORKLOADS = ("listen", "adhoc", "dedup")
 DEFAULT_DATA = os.path.expanduser(os.path.join("~", "testdata", "sf0.1"))
 
@@ -71,9 +72,10 @@ def prepare(workload, seed, workdir):
 
 
 def inject_near_dups(src, seed, workdir):
-    """The sf0.1 documents plus a seeded share of near-duplicates: copies
-    of random documents with a few tokens dropped or swapped. Seed 0 is
-    the testdata as is."""
+    """Every second sf0.1 document plus a seeded share of near-duplicates:
+    copies of kept documents with a few tokens dropped or swapped. Seed 0
+    is the testdata as is. The kept half is the same for every seed, so
+    runs differ only in what the injected duplicates share."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     out = os.path.join(workdir, "dedup-data")
@@ -81,7 +83,7 @@ def inject_near_dups(src, seed, workdir):
     t = pq.read_table(os.path.join(src, "documents.parquet"))
     if seed != 0:
         rng = random.Random(seed)
-        rows = t.to_pylist()
+        rows = t.to_pylist()[::DEDUP_KEEP_EVERY]
         next_id = max(r["doc_id"] for r in rows) + 1
         extra = []
         for _ in range(round(DEDUP_INJECT_SHARE * len(rows))):
@@ -96,7 +98,7 @@ def inject_near_dups(src, seed, workdir):
             text = " ".join(toks)
             extra.append(dict(base, doc_id=next_id, text=text, n_chars=len(text)))
             next_id += 1
-        t = pa.concat_tables([t, pa.Table.from_pylist(extra, schema=t.schema)])
+        t = pa.Table.from_pylist(rows + extra, schema=t.schema)
     pq.write_table(t, os.path.join(out, "documents.parquet"))
     return out, t.num_rows
 

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """graft benchmark: one command for the listen, adhoc and dedup workloads.
 
-    python3 perfbench/run.py --workload listen --seed 0 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload listen --seed 0 --seconds 6 --trace 0
 
 Run from the root of a graft checkout. Builds the engine and the
 benchmark harness from source into .bench_build/ (first run only),
@@ -130,7 +130,7 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True, choices=list(M.WORKLOADS))
     ap.add_argument("--seed", type=int, default=0)
-    ap.add_argument("--seconds", type=float, default=8)
+    ap.add_argument("--seconds", type=float, default=6)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     a = ap.parse_args()
 

@@ -61,6 +61,8 @@ object Setup {
     val warm = mutable.ArrayBuffer[Double]()
     val memoS = mutable.LinkedHashMap[String, mutable.ArrayBuffer[Double]]()
     val reps = (1 to ctx.setupReps).map { i =>
+      // the previous set-up's garbage is not this one's cost
+      System.gc()
       val t0 = Clock.ms()
       val spark = ctx.trace.span(s"setup-$i") { _ =>
         val s = ctx.session()

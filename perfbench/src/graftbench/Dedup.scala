@@ -7,11 +7,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.EdgeGraph
 
 /** `dedup`: the LLM-data near-duplicate chain, cold, once per run, on
-  * the sf0.1 documents plus the run's injected near-duplicates: MinHash
-  * signatures → LSH bands → pair tables → components and label
-  * propagation → the consumer keys. Its outputs are checked against an
-  * independent union-find and label propagation over the emitted
-  * pairs. */
+  * half the sf0.1 documents (all of them on seed 0) plus the run's
+  * injected near-duplicates: MinHash signatures → LSH bands → pair
+  * tables → components and label propagation → the consumer keys. Its
+  * outputs are checked against an independent union-find and label
+  * propagation over the emitted pairs. */
 object Dedup {
   /** The pair tables the chain's consumers read: bigram τ0.3 (components
     * and the three reports on them), token τ0.8 (label propagation and
