@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.tables.Tables
+import graft.util.SessionMemo
 
 /** Multimodal column design (SURVEY.md §2 B.10 "multimodal columns").
   *
@@ -71,16 +72,12 @@ object Multimodal {
   }
 
   /** Session-memoized encoded-image corpus (doc_id, n_bytes, png) —
-    * the synthesized fixture stands in for the STORED media corpus: a
-    * real pipeline reads each asset's bytes once from the object
-    * store, so the decode/resample consumers here share ONE
-    * materialization instead of re-encoding the corpus per key
-    * (EdgeGraph posture applied to media). Blobs are constant-color
-    * PNGs (~300 B deflated), so the checkpointed corpus stays small. */
-  def pngCorpus(s: SparkSession, d: String): DataFrame = {
-    val it = pngCache.keySet.iterator()
-    while (it.hasNext) if (it.next()._1.isStopped) it.remove()
-    pngCache.computeIfAbsent((s.sparkContext, d), _ => {
+    * the synthesized fixture stands in for the STORED media corpus
+    * that [[decodeImage]] (q_mm_decode) and [[resizeImage]]
+    * (q_mm_resize) read. Blobs are constant-color PNGs (~300 B
+    * deflated), so the checkpointed corpus stays small. */
+  def pngCorpus(s: SparkSession, d: String): DataFrame =
+    SessionMemo.of(s, s"pngCorpus:$d") {
       import s.implicits._
       // repartition the 2-long-column scan BEFORE the CPU-bound encode:
       // the corpus is one parquet file → one input partition, which
@@ -93,12 +90,7 @@ object Multimodal {
         .as[(Long, Int)]
         .mapPartitions(rows => rows.map { case (id, n) => (id, n, pngFor(id, n)) })
         .toDF("doc_id", "n_bytes", "png")
-        .localCheckpoint(true)
-    })
-  }
-
-  private val pngCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), DataFrame]()
+    }
 
   /** REAL image decode (r6, VERDICT #5): decode the corpus's PNG
     * bytes with javax.imageio and report MEASURED width/height/bands
@@ -481,18 +473,13 @@ object Multimodal {
         "entropy")
   }
 
-  private val phashCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), DataFrame]()
-
-  /** Session-memoized (doc_id, phash) table: encode the patterned
-    * PNG, DECODE it back with imageio (the real-decode contract of
-    * this layer), and hash the decoded pixels. Partition-parallel;
-    * repartitioned before the CPU-bound encode+decode+DCT (see
-    * [[pngCorpus]]). */
-  def imagePhash(s: SparkSession, d: String): DataFrame = {
-    val it = phashCache.keySet.iterator()
-    while (it.hasNext) if (it.next()._1.isStopped) it.remove()
-    phashCache.computeIfAbsent((s.sparkContext, d), _ => {
+  /** Session-memoized (doc_id, phash) table read by q_mm_phash: encode
+    * the patterned PNG, DECODE it back with imageio (the real-decode
+    * contract of this layer), and hash the decoded pixels.
+    * Partition-parallel; repartitioned before the CPU-bound
+    * encode+decode+DCT (see [[pngCorpus]]). */
+  def imagePhash(s: SparkSession, d: String): DataFrame =
+    SessionMemo.of(s, s"imagePhash:$d") {
       import s.implicits._
       Tables.documents(s, d).select(col("doc_id"))
         .repartition(s.sparkContext.defaultParallelism)
@@ -503,9 +490,7 @@ object Multimodal {
           (id, phash64(img))
         })
         .toDF("doc_id", "phash")
-        .localCheckpoint(true)
-    })
-  }
+    }
 
   /** Deterministic VAD WAV (the [[wavFor]] analog with SILENCE):
     * PCM16 mono 8 kHz, 256 + n % 1024 samples, 80-sample segments;

@@ -34,14 +34,10 @@ object LlmOps {
   private def arrSum(c: Column): Column =
     aggregate(c, lit(0.0), (acc, x) => acc + x)
 
-  private val topkCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), DataFrame]()
-
   /** Session-memoized ranked top-10 neighbor table
-    * (a_id, a_lab, b_id, b_lab, cos, rn) — the shared derivation
-    * behind q_precision_recall_k and q_ndcg (EdgeGraph posture: one
-    * broadcast-cross + window per (session, sfDir), materialized via
-    * localCheckpoint so each metric key pays only its own rollup).
+    * (a_id, a_lab, b_id, b_lab, cos, rn) — one broadcast-cross +
+    * window read by q_precision_recall_k, q_ndcg, q_err_at_k, q_rbp
+    * and q_mutual_knn, each paying only its own rollup.
     *
     * SAMPLING CONTRACT (r8 VERDICT task 4; absolute cap r11 task 3):
     * the QUERY side is operators/EvalSample — the deterministic
@@ -55,10 +51,8 @@ object LlmOps {
     * apply the identical predicate via EvalSample.sqlPred. At 100 TB
     * the corpus side additionally routes through the IVF cells
     * (q_sim_ivf); the scoring tail here is unchanged. */
-  private[graft] def rankedTop10(s: SparkSession, d: String): DataFrame = {
-    val it = topkCache.keySet.iterator()
-    while (it.hasNext) if (it.next()._1.isStopped) it.remove()
-    topkCache.computeIfAbsent((s.sparkContext, d), _ => {
+  private[graft] def rankedTop10(s: SparkSession, d: String): DataFrame =
+    graft.util.SessionMemo.of(s, s"rankedTop10:$d") {
       graft.expr.Registry.ensure(s)
       val e = Tables.embeddings(s, d)
       val a = e.filter(col("vec_id") % graft.operators.EvalSample.every === 0
@@ -73,9 +67,7 @@ object LlmOps {
           round(expr("cosine_sim(a_emb, b_emb)"), 6).as("cos"), col("b_id"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 10)
-        .localCheckpoint(eager = true)
-    })
-  }
+    }
 
   private def dotD(a: Column, b: Column): Column =
     arrSum(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")))
@@ -138,7 +130,7 @@ object LlmOps {
         .distinct()
       // r14 opt (guide §2.3 "shuffle keys and metadata instead of
       // payloads", §3.3 "explode before a join multiplies the
-      // shuffle"; measured via tools/ProfileTfidf): the old shape
+      // shuffle"; profile in OPTIMIZATION_r14.md §8): the old shape
       // joined pairs (759 k) to per-term weight rows on a_id — a
       // ~15 M-row pair×term intermediate — then shuffled THAT on
       // (b_id, term) and re-aggregated back to pair grain (~4 s of the

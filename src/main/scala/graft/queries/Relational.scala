@@ -403,27 +403,13 @@ object Relational {
       // jobs — submit them from two driver threads so the second
       // write's tasks back-fill executors left idle by the first's
       // straggler tail (each write is only 8 bucket tasks wide)
-      locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val fo = Future {
-          Tables.orders(s, d).select("o_orderkey", "o_totalprice")
-            .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-            .mode("overwrite").saveAsTable(ordersT)
-        }
-        val fl = Future {
-          Tables.lineitem(s, d).select("l_orderkey", "l_quantity")
-            .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-            .mode("overwrite").saveAsTable(lineitemT)
-        }
-        // Future.sequence, not two sequential Awaits: if the first
-        // write failed, awaiting it alone would propagate while the
-        // second job kept running detached (its own failure never
-        // observed). The combined future surfaces either leg's error
-        // after both legs have settled.
-        Await.result(Future.sequence(Seq(fo, fl)), Duration.Inf)
-      }
+      graft.util.Par.both(
+        Tables.orders(s, d).select("o_orderkey", "o_totalprice")
+          .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
+          .mode("overwrite").saveAsTable(ordersT),
+        Tables.lineitem(s, d).select("l_orderkey", "l_quantity")
+          .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
+          .mode("overwrite").saveAsTable(lineitemT))
       val agg = s.table(lineitemT)
         .groupBy("l_orderkey")
         .agg(count(lit(1)).as("n_lines"), sum("l_quantity").as("sum_qty"))

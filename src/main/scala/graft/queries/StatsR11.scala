@@ -93,33 +93,25 @@ object StatsR11 {
       .localCheckpoint(true) // scanned once per hop
   }
 
-  /** Session-memoized corpus cell graphs (the rankedTop10/EdgeGraph
-    * posture): the cell graph is the WRITE-ONCE index artifact every
-    * graph-ANN key searches, so one (session, sfDir, variant) build
-    * is shared by q_ann_nsw / q_ann_nsw_multi / q_ann_hnsw /
-    * q_ann_nndescent(2) / s_stream_graph_insert instead of each key
-    * paying the n²/k build again. Variants: `heldOut` drops the
-    * query vector 0 (q_ann_nsw's contract); `altSeeds` uses seed set
-    * k+1..2k (NN-descent's disagreeing init). k is data-derived
-    * (operators/Cells) inside the memo, m = 8 everywhere.
+  /** Session-memoized corpus cell graph — the write-once index every
+    * graph-ANN key searches: q_ann_nsw, q_ann_nsw_multi, q_ann_hnsw,
+    * q_ann_nndescent(2), q_ann_tombstone, s_stream_graph_insert and
+    * s_stream_graph_delete. Variants: `heldOut`
+    * drops the query vector 0 (q_ann_nsw's contract); `altSeeds` uses
+    * seed set k+1..2k (NN-descent's disagreeing init). k is
+    * data-derived (operators/Cells), m = 8 everywhere.
     */
-  private val graphMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String, Boolean, Boolean), DataFrame]()
-
   private[graft] def corpusCellGraph(s: SparkSession, d: String,
                                      heldOut: Boolean = false,
-                                     altSeeds: Boolean = false): DataFrame = {
-    val it = graphMemo.keySet.iterator()
-    while (it.hasNext) if (it.next()._1.isStopped) it.remove()
-    graphMemo.computeIfAbsent((s.sparkContext, d, heldOut, altSeeds), _ => {
+                                     altSeeds: Boolean = false): DataFrame =
+    graft.util.SessionMemo.value(s, s"cellGraph:$d:$heldOut:$altSeeds") {
       graft.expr.Registry.ensure(s)
       val e0 = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val e = if (heldOut) e0.filter(col("vec_id") =!= 0) else e0
       // k = max(4, ⌈n/budget⌉) from a one-row count (bounded by design)
       val k = graft.operators.Cells.k(e.count())
       cellGraph(e, cellsK = k, m = 8, seedBase = if (altSeeds) k + 1 else 1)
-    })
-  }
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](

@@ -55,32 +55,20 @@ object StatsR12 {
   }
 
   /** Session-memoized layered corpus (vec_id ≠ 0 with its md5-
-    * geometric `lvl`) — the StatsR11.corpusCellGraph posture: the
-    * hierarchy is a write-once index artifact shared by q_ann_hnsw
-    * and s_stream_hnsw_insert. */
-  private val lvMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), DataFrame]()
-
-  private[graft] def layeredCorpus(s: SparkSession, d: String): DataFrame = {
-    val it = lvMemo.keySet.iterator()
-    while (it.hasNext) if (it.next()._1.isStopped) it.remove()
-    lvMemo.computeIfAbsent((s.sparkContext, d), _ =>
+    * geometric `lvl`) — the layer subsets and entry selection of
+    * q_ann_hnsw and s_stream_hnsw_insert. */
+  private[graft] def layeredCorpus(s: SparkSession, d: String): DataFrame =
+    graft.util.SessionMemo.of(s, s"layeredCorpus:$d") {
       Tables.embeddings(s, d).filter(col("vec_id") =!= 0)
         .select(col("vec_id"), col("embedding"))
         .withColumn("lvl", levelCol(col("vec_id")))
-        .localCheckpoint(true)) // layer subsets + entry selection
-  }
+    }
 
-  /** Session-memoized per-layer cell-local top-8 graph; seeds = first
-    * k members by vec_id (k from the LAYER's count — upper layers get
-    * small k, operators/Cells). */
-  private val layerMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String, Int), DataFrame]()
-
-  private[graft] def layerGraph(s: SparkSession, d: String, l: Int): DataFrame = {
-    val it = layerMemo.keySet.iterator()
-    while (it.hasNext) if (it.next()._1.isStopped) it.remove()
-    layerMemo.computeIfAbsent((s.sparkContext, d, l), _ => {
+  /** Session-memoized per-layer cell-local top-8 graph of q_ann_hnsw and
+    * s_stream_hnsw_insert; seeds = first k members by vec_id (k from
+    * the LAYER's count — upper layers get small k, operators/Cells). */
+  private[graft] def layerGraph(s: SparkSession, d: String, l: Int): DataFrame =
+    graft.util.SessionMemo.value(s, s"layerGraph:$d:$l") {
       graft.expr.Registry.ensure(s)
       val lv = layeredCorpus(s, d)
       val sub = lv.filter(col("lvl") >= l).select("vec_id", "embedding")
@@ -94,8 +82,7 @@ object StatsR12 {
         .agg(array_sort(collect_list(struct(col("cell"), col("c_emb"))))
           .as("cents"))
       StatsR11.cellGraphFromPacked(sub, packed, k, m = 8)
-    })
-  }
+    }
 
   /** DuckDB twin of [[layeredCorpus]]: the held-out corpus `e` and
     * the layered view `lv` (declared above `oracle` — init order). */

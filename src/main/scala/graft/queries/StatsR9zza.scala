@@ -102,16 +102,8 @@ object StatsR9zza {
       // from two driver threads lets the scheduler back-fill one run's
       // stragglers with the other's tasks. Results are unchanged: CC is
       // deterministic and each leg owns its own frames.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val fBefore = Future(ccStats(nodes, edges))
-      val fAfter = Future(ccStats(nodesA, edgesA))
-      // Future.sequence so either leg's failure is surfaced after both
-      // settle — awaiting the first alone would leave the second job
-      // running detached (and its failure unobserved) on error
-      val Seq(before, after) =
-        Await.result(Future.sequence(Seq(fBefore, fAfter)), Duration.Inf)
+      val (before, after) =
+        graft.util.Par.both(ccStats(nodes, edges), ccStats(nodesA, edgesA))
       val nTot = nodes.agg(count(lit(1)).as("n_nodes"))
       nTot.crossJoin(before
           .select(col("n_cc").as("n_cc_before"),

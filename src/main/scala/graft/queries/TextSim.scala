@@ -782,11 +782,11 @@ object TextSim {
     "q_contain_join" -> ((s, d) => {
       Registry.ensure(s)
       // r14 note: deliberately NOT fanned out (util.Par) — measured A/B
-      // (tools/AbContain, 3 reps each) says the single-partition shape
-      // wins 3.5 vs 5.2 s: this key's cost is its join/window cascade,
-      // not per-row hashing, and 32-way partitioning just multiplies
-      // short-stage scheduling and shuffle-block count at this corpus
-      // size. At scale the scan arrives pre-split anyway.
+      // (OPTIMIZATION_r14.md §12, 3 reps each) says the single-partition
+      // shape wins 3.5 vs 5.2 s: this key's cost is its join/window
+      // cascade, not per-row hashing, and 32-way partitioning just
+      // multiplies short-stage scheduling and shuffle-block count at this
+      // corpus size. At scale the scan arrives pre-split anyway.
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), expr("bigram_hashes(split(text, ' '))").as("hs"))
         .withColumn("sz", size(col("hs")))

@@ -22,24 +22,18 @@ object Training {
   private def bucket(key: Column): Column =
     conv(substring(md5(key.cast("string")), 1, 4), 16, 10).cast("int") % 10000
 
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), Array[(Int, String, String, Long)]]()
-
-  /** Session-memoized 10-round BPE merge table (EdgeGraph posture:
-    * learn and apply share one derivation per (session, sfDir)),
-    * learned in EXACT BATCHES (r7): each Spark job yields as many
-    * canonical merges as provably commute (see the selection proof
-    * inline), cutting the sequential argmax-job count — the latency
+  /** Session-memoized 10-round BPE merge table, read by q_bpe_learn
+    * and q_bpe_apply, learned in EXACT BATCHES (r7): each Spark job
+    * yields as many canonical merges as provably commute (see the
+    * selection proof inline), cutting the sequential argmax-job count — the latency
     * floor of distributed BPE — by the mean batch size. Each
     * round is a pair-explode + partial agg over the word-TYPE table
     * weighted by freq — round cost ∝ distinct types, not tokens; the
     * per-round argmax is a bounded 1-ROW driver scalar (CC
     * convergence-counter precedent), tie-broken (freq desc, pair asc)
     * so the merge sequence is deterministic. */
-  private[graft] def learnedMerges(s: SparkSession, d: String): Array[(Int, String, String, Long)] = {
-    val it = bpeCache.keySet.iterator()
-    while (it.hasNext) if (it.next()._1.isStopped) it.remove()
-    bpeCache.computeIfAbsent((s.sparkContext, d), _ => {
+  private[graft] def learnedMerges(s: SparkSession, d: String): Array[(Int, String, String, Long)] =
+    graft.util.SessionMemo.value(s, s"learnedMerges:$d") {
       val rounds = 10
       val topM = 64
       var words = Tables.documents(s, d)
@@ -153,8 +147,7 @@ object Training {
         done += batch.size
       }
       merges.result()
-    })
-  }
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -124,8 +124,8 @@ object StreamOps {
     // one delta file per state store per stateful operator, so on the
     // bounded test inputs (state ≤ a few thousand keys) the commit I/O
     // scales with the CAP, not the data — measured A/B
-    // (tools/AbStateParts, alternating reps, idle): cap2 beats cap8 on
-    // every sampled stateful key (zscore 2.44→1.75, sessionize
+    // (OPTIMIZATION_r14.md §11, alternating reps, idle): cap2 beats cap8
+    // on every sampled stateful key (zscore 2.44→1.75, sessionize
     // 1.92→1.56, dedup_watermark 2.07→1.87, topk 1.70→1.58, cms
     // 3.28→3.17). Results are partition-count-independent (batch-twin
     // pins + oracle). A real deployment sizes state stores to input

@@ -1,5 +1,10 @@
 package graft.util
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration.Duration
+import scala.util.Success
+
 import org.apache.spark.sql.DataFrame
 
 /** Scale-adaptive scan fan-out (guide §2.5 "input skew — one huge
@@ -30,5 +35,17 @@ object Par {
   def fanOut(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
+  }
+
+  /** Runs `a` and `b` on two driver threads, so two independent jobs
+    * overlap, and returns both results. Both legs settle before the
+    * first failure (`a`'s before `b`'s) is rethrown, so no job is left
+    * running detached when the error reaches the caller. */
+  def both[A, B](a: => A, b: => B): (A, B) = {
+    val fa = Future(a).transform(Success(_))
+    val fb = Future(b).transform(Success(_))
+    val ta = Await.result(fa, Duration.Inf)
+    val tb = Await.result(fb, Duration.Inf)
+    (ta.get, tb.get)
   }
 }

@@ -3,50 +3,62 @@ package graft.util
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session-scoped materialize-once cache for shared derived tables —
-  * the EdgeGraph memo pattern (r5 VERDICT item 1) factored out so the
-  * round-13 optimization pass can apply it to the daily-grid helpers
-  * without six copies of the boilerplate.
+/** Session-scoped build-once cache for shared derivations: the near-dup
+  * pair tables and their labels, the daily grids, the recsys and
+  * partsupp dimensions, the ANN cell graphs, the media corpora, the BPE
+  * merge table. A real pipeline materializes each per corpus snapshot
+  * and serves every consumer from it; here the first caller per
+  * (SparkContext, key) builds and later callers get the stored value.
   *
-  * The hot shared derivations (`StatsR9.dailyMean`: 83 call sites,
-  * `StatsR8e.dailyOhlc`: 22, `custRev`: 12, `handoff`: 11, the three
-  * `dailyIdx` variants: 16) each re-scanned a fact table and re-ran the
-  * same partial aggregation on EVERY call; a real pipeline materializes
-  * each per corpus snapshot and serves every consumer from it. The
-  * first caller per (SparkContext, key) builds and eagerly
-  * localCheckpoints (lineage cut, AQE-planned, blocks die with the
-  * context); later callers scan the materialized rows. Semantics are
-  * untouched: every memoized helper is deterministic (exact-integer
-  * aggregates / totally-ordered windows), so the cached frame is
-  * byte-identical to a fresh derivation.
+  * The contract every memo follows:
+  *  - Key naming: the key names the derivation and ALL of its
+  *    parameters, data dir included, e.g. s"dailyMean:$d" or
+  *    s"pairs:$d:$kind:$tau". Every memo shares this one key space, so
+  *    two derivations never share a key.
+  *  - One checkpoint: [[of]] eagerly localCheckpoints the built frame
+  *    (lineage cut, AQE-planned, blocks die with the context), so a
+  *    body passed to it ends WITHOUT its own checkpoint. A body that
+  *    must checkpoint inside (iterative rounds, the cell graphs) goes
+  *    through [[value]], which stores what the body returns as is.
+  *  - Nested builds are safe: a body may call other memos (components
+  *    builds pairs, lshBands builds minhashSigs, curBrands builds
+  *    consecOrders/orderBrands).
+  *  - Eviction: entries whose context has stopped are dropped on the
+  *    next call — their checkpoint blocks are gone and the frames
+  *    would throw on use.
+  *
+  * Semantics are untouched: every memoized derivation is deterministic
+  * (exact-integer aggregates, totally-ordered windows), so the stored
+  * frame is byte-identical to a fresh derivation.
   */
 object SessionMemo {
 
-  private val cache = new ConcurrentHashMap[(SparkContext, String), DataFrame]()
+  private val cache = new ConcurrentHashMap[(SparkContext, String), AnyRef]()
 
-  /** @param key unique per derivation AND data dir, e.g. s"dailyMean:$d" */
-  def of(s: org.apache.spark.sql.SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    // drop entries whose context has stopped — their checkpoint blocks
-    // are gone and the frames would throw on use
+  /** The value built once per (context, key), stored as `build` returns it. */
+  def value[T <: AnyRef](s: SparkSession, key: String)(build: => T): T = {
     val it = cache.keySet.iterator()
     while (it.hasNext) if (it.next()._1.isStopped) it.remove()
-    // get-then-putIfAbsent, NOT computeIfAbsent: build thunks nest
-    // (curBrands builds consecOrders/orderBrands, marketRet/ser/dailyIdx
-    // ride dailyMean) and ConcurrentHashMap forbids updating other
-    // mappings from inside a computeIfAbsent mapping function — when a
-    // nested key hashes to the in-flight outer key's bin it throws
-    // IllegalStateException("Recursive update"). Building outside the
-    // map's lock is safe: a concurrent duplicate build is deterministic
-    // and the loser's frame is simply dropped (putIfAbsent keeps one).
+    // get-then-putIfAbsent, NOT computeIfAbsent: ConcurrentHashMap
+    // forbids updating other mappings from inside a computeIfAbsent
+    // mapping function — when a nested key hashes to the in-flight
+    // outer key's bin it throws IllegalStateException("Recursive
+    // update"). Building outside the map's lock is safe: a concurrent
+    // duplicate build is deterministic and the loser's value is simply
+    // dropped (putIfAbsent keeps one).
     val k = (s.sparkContext, key)
     val hit = cache.get(k)
-    if (hit != null) hit
+    if (hit != null) hit.asInstanceOf[T]
     else {
-      val built = build.localCheckpoint(eager = true)
+      val built = build
       val prev = cache.putIfAbsent(k, built)
-      if (prev != null) prev else built
+      if (prev != null) prev.asInstanceOf[T] else built
     }
   }
+
+  /** The frame built once per (context, key), eagerly localCheckpointed. */
+  def of(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
+    value(s, key)(build.localCheckpoint(eager = true))
 }

@@ -3,8 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The r13 optimization round moved shared derivations behind
-  * util.SessionMemo (and the EdgeGraph-local memo pattern). The memo
+/** Every shared derivation sits behind util.SessionMemo. The memo
   * must be pure amortization: the materialized frame byte-equals a
   * fresh derivation, and repeated calls serve the SAME frame instead
   * of re-deriving. These pins keep a future edit from turning the
@@ -91,5 +90,75 @@ class SessionMemoSpec extends AnyFunSuite with SparkFixture {
       .filter(col("jw") >= 0.92)
       .select(col("a_id"), col("c.b_id").as("b_id"), col("jw"))
     assert(rows(memo) === rows(fresh))
+  }
+
+  /** Jobs `body` starts. A marker job follows it in the same group,
+    * and a listener sees job starts in order, so once the marker's
+    * start is seen every job of `body` has been counted. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"memo-pin-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
+          if (e.properties.getProperty("spark.job.description") == "marker") markerSeen.countDown()
+          else jobs.incrementAndGet()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try {
+        body
+        sc.setJobDescription("marker")
+        spark.range(1).count()
+      } finally sc.clearJobGroup()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("memos that had their own (context, sfDir) maps stay apart in the shared key space") {
+    graft.expr.Registry.ensure(spark)
+    val memos = Seq(
+      operators.EdgeGraph.tokenHashes(spark, sf) -> Seq("doc_id", "lang", "hs"),
+      operators.EdgeGraph.lshBands(spark, sf) -> Seq("doc_id", "lang", "bsig"),
+      operators.EdgeGraph.termFreq(spark, sf) ->
+        Seq("doc_id", "lang", "dlen", "term", "tf_raw", "tf"),
+      operators.EdgeGraph.bigramScores(spark, sf) ->
+        Seq("doc_id", "lang", "n_bigrams", "avg_lp"),
+      queries.Analytics.custBrand(spark, sf) -> Seq("cust", "b", "c"),
+      queries.Analytics.brandSims(spark, sf) -> Seq("b", "b2", "cos"),
+      queries.TpchPartSupp.partsupp(spark, sf) ->
+        Seq("ps_partkey", "ps_suppkey", "ps_availqty", "ps_supplycost_cents"),
+      queries.LlmOps.rankedTop10(spark, sf) ->
+        Seq("a_id", "a_lab", "b_lab", "cos", "b_id", "rn"),
+      queries.StatsR12.layeredCorpus(spark, sf) -> Seq("vec_id", "embedding", "lvl"))
+    memos.foreach { case (df, cols) => assert(df.columns.toSeq === cols) }
+    val frames = memos.map(_._1)
+    for (i <- frames.indices; j <- frames.indices if i < j)
+      assert(!(frames(i) eq frames(j)), s"memo $i and memo $j share a frame")
+  }
+
+  test("an outer memo build stores the inner memo it builds") {
+    // `fresh` is the same data under a key no other test builds, so
+    // each outer memo below is built before its inner one
+    val fresh = sf + "/"
+    val builds = Seq[(() => Unit, () => AnyRef)](
+      (() => operators.EdgeGraph.components(spark, sf, "bigram", 0.6),
+        () => operators.EdgeGraph.pairs(spark, sf, "bigram", 0.6)),
+      (() => queries.Analytics.brandSims(spark, fresh),
+        () => queries.Analytics.custBrand(spark, fresh)),
+      (() => queries.StatsR12.layerGraph(spark, fresh, 1),
+        () => queries.StatsR12.layeredCorpus(spark, fresh)))
+    builds.foreach { case (outer, inner) =>
+      outer()
+      var first: AnyRef = null
+      assert(jobsDuring { first = inner() } === 0,
+        "the inner memo was rebuilt: the outer build did not store it")
+      assert(inner() eq first)
+    }
   }
 }
