@@ -127,11 +127,8 @@ object SparkEntry {
     (StatsR12.queries, StatsR12.oracle),
     (StatsR13.queries, StatsR13.oracle),
     (graft.streaming.StreamOps.queries, graft.streaming.StreamOps.oracle),
-    (graft.streaming.StreamOpsR9c.queries, graft.streaming.StreamOpsR9c.oracle),
-    (graft.streaming.StreamOpsR10.queries, graft.streaming.StreamOpsR10.oracle),
-    (graft.streaming.StreamOpsR11.queries, graft.streaming.StreamOpsR11.oracle),
-    (graft.streaming.StreamOpsR11.queriesB, Map.empty),
-    (graft.streaming.StreamOpsR13.queries, graft.streaming.StreamOpsR13.oracle)
+    (graft.streaming.StreamState.queries, graft.streaming.StreamState.oracle),
+    (graft.streaming.StreamCorpus.queries, graft.streaming.StreamCorpus.oracle)
   )
 
   // a Seq + reduce, NOT one ++ chain: 100+ infix terms in a single

@@ -570,14 +570,11 @@ object Joins {
     // (plan-pinned in PlanAssertionsSpec). executedPlan is forced
     // inside the conf scope, as q_scan_agg_pushdown does.
     "q_runtime_bloom" -> ((s, d) => {
-      val scoped = Seq(
-        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-      val prev = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-      try {
-        scoped.foreach { case (k, v) => s.conf.set(k, v) }
+      graft.util.ScopedConf(s,
+          "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+          "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val o = Tables.orders(s, d)
           .filter(col("o_orderpriority") === "1-URGENT")
           .select("o_orderkey")
@@ -588,8 +585,7 @@ object Joins {
           .orderBy("l_returnflag")
         df.queryExecution.executedPlan // plan under the scoped confs
         df
-      } finally prev.foreach { case (k, vOpt) =>
-        vOpt.fold(s.conf.unset(k))(v => s.conf.set(k, v)) }
+      }
     }),
 
     // AUTOMATIC band-join rewrite (plans/Rules.RewriteBandJoin): the

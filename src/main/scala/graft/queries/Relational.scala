@@ -18,6 +18,14 @@ object Relational {
   private def nullifD(c: org.apache.spark.sql.Column, v: Double) =
     when(c === v, lit(null).cast("double")).otherwise(c)
 
+  /** Parquet aggregate pushdown on, with parquet routed through the
+    * DSv2 reader (where the pushdown lives; parquet defaults to V1). */
+  private def aggPushdownConfs(s: SparkSession): Seq[(String, String)] = {
+    val v1Key = "spark.sql.sources.useV1SourceList"
+    Seq("spark.sql.parquet.aggregatePushdown" -> "true",
+      v1Key -> s.conf.get(v1Key).split(",").filterNot(_.trim == "parquet").mkString(","))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_scan_project" -> ((s, d) =>
       Tables.lineitem(s, d)
@@ -95,18 +103,10 @@ object Relational {
     // metadata-only pass over file footers (plan-pinned:
     // PushedAggregation at the scan). Conf set per query, restored.
     "q_scan_agg_pushdown" -> ((s, d) => {
-      // both confs matter: aggregate pushdown lives on the DSv2
-      // parquet reader, and parquet defaults to the V1 path — route
-      // it through V2 for this query only. Conf is consulted at PLAN
-      // time, so the physical plan is forced inside the scope (the
-      // Dataset caches it; later execution reuses the pushed plan).
-      val aggKey = "spark.sql.parquet.aggregatePushdown"
-      val v1Key = "spark.sql.sources.useV1SourceList"
-      val prevAgg = s.conf.getOption(aggKey)
-      val prevV1 = s.conf.get(v1Key)
-      try {
-        s.conf.set(aggKey, "true")
-        s.conf.set(v1Key, prevV1.split(",").filterNot(_.trim == "parquet").mkString(","))
+      // conf is consulted at PLAN time, so the physical plan is
+      // forced inside the scope (the Dataset caches it; later
+      // execution reuses the pushed plan)
+      graft.util.ScopedConf(s, aggPushdownConfs(s): _*) {
         // numeric columns only: parquet aggregate pushdown rejects
         // timestamp min/max (logical-type stats ambiguity), and ONE
         // unsupported aggregate abandons the whole pushdown
@@ -118,12 +118,6 @@ object Relational {
             max("l_quantity").as("max_qty"))
         df.queryExecution.executedPlan // plan under the pushdown confs
         df
-      } finally {
-        prevAgg match {
-          case Some(v) => s.conf.set(aggKey, v)
-          case None    => s.conf.unset(aggKey)
-        }
-        s.conf.set(v1Key, prevV1)
       }
     }),
 
@@ -140,13 +134,7 @@ object Relational {
         .select("o_orderkey", "o_custkey", "o_orderpriority")
         .write.mode("overwrite").partitionBy("o_orderpriority")
         .parquet(s"$tmp/po")
-      val aggKey = "spark.sql.parquet.aggregatePushdown"
-      val v1Key = "spark.sql.sources.useV1SourceList"
-      val prevAgg = s.conf.getOption(aggKey)
-      val prevV1 = s.conf.get(v1Key)
-      try {
-        s.conf.set(aggKey, "true")
-        s.conf.set(v1Key, prevV1.split(",").filterNot(_.trim == "parquet").mkString(","))
+      graft.util.ScopedConf(s, aggPushdownConfs(s): _*) {
         val df = s.read.parquet(s"$tmp/po")
           .groupBy("o_orderpriority")
           .agg(count(lit(1)).as("n"),
@@ -155,12 +143,6 @@ object Relational {
           .orderBy("o_orderpriority")
         df.queryExecution.executedPlan // plan under the pushdown confs
         df
-      } finally {
-        prevAgg match {
-          case Some(v) => s.conf.set(aggKey, v)
-          case None    => s.conf.unset(aggKey)
-        }
-        s.conf.set(v1Key, prevV1)
       }
     }),
 

@@ -12,7 +12,7 @@ import graft.tables.Tables
   * length (bin() string length — no floating log2), register
   * max-merge, and the estimator with its small-range linear-counting
   * branch. The registers are the MERGEABLE distinct state a 100 TB
-  * pipeline ships between shards; s_stream_hll (StreamOpsR10) is the
+  * pipeline ships between shards; s_stream_hll (StreamState) is the
   * order-independent streaming twin over the identical registers.
   */
 object StatsR10f {

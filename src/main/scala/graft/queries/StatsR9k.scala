@@ -12,7 +12,7 @@ import graft.tables.Tables
   * (the (y, event_type, d) total order removes ties by construction),
   * and the k-sample Anderson–Darling A² with per-position terms
   * snapped to 1e6 before the exact sums. The streaming half of this
-  * wave lives in streaming/StreamOps.scala (s_stream_funnel /
+  * wave lives in streaming/StreamState.scala (s_stream_funnel /
   * s_stream_drawdown / s_stream_gap_alarm).
   */
 object StatsR9k {

@@ -12,7 +12,7 @@ import graft.tables.Tables
   * numerator terms snapped once per brand), repeat-part purchase
   * rates, and median/mean order value per market segment (med2
   * convention on exact cents). The streaming half of this wave lives
-  * in streaming/StreamOps.scala (s_stream_vwap /
+  * in streaming/StreamState.scala (s_stream_vwap /
   * s_stream_ring_zscore).
   */
 object StatsR9r {

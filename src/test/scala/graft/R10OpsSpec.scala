@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** r10 wave-1 key-level pins (queries/StatsR10.scala,
-  * streaming/StreamOpsR10.scala): each key's result folded brute-force
+  * streaming/StreamState.scala, StreamCorpus.scala): each key's result folded brute-force
   * in pure Scala over the sf0.001 events/part tables — the triple-gate
   * spec leg alongside the DuckDB oracle and the solo bench.
   */

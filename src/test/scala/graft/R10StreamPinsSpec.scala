@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** r10: key-level pins for the two r9 streaming keys that had full
   * DuckDB oracles but no named spec test (`s_stream_cusum`,
-  * `s_stream_newhigh`, streaming/StreamOps.scala) — the batch-twin
+  * `s_stream_newhigh`, streaming/StreamState.scala) — the batch-twin
   * doctrine fold of the sf0.001 events, same pattern as
   * R9StreamWave34Spec (r9 VERDICT task 4).
   */

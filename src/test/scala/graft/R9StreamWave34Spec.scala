@@ -5,7 +5,7 @@ import java.math.{BigDecimal => JBD, RoundingMode}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** r9 wave-34 streaming semantics (streaming/StreamOpsR9c.scala):
+/** r9 wave-34 streaming semantics (streaming/StreamState.scala):
   * each streaming key's read-back pinned against the brute-force
   * batch fold of the sf0.001 events (the batch-twin doctrine,
   * SURVEY §5.2.3) — these six are fully deterministic read-backs.

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** r9 wave-11 semantics (queries/StatsR9k.scala + the three streaming
-  * keys in streaming/StreamOps.scala): batch statistics re-derived by
+  * keys in streaming/StreamState.scala): batch statistics re-derived by
   * brute-force folds; streaming keys checked against the same folds
   * (batch equivalence — the stream ran through real state stores).
   */

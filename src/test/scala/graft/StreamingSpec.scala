@@ -13,7 +13,7 @@ import graft.tables.Tables
   */
 class StreamingSpec extends AnyFunSuite with SparkFixture {
 
-  private def run(name: String) = StreamOps.queries(name)(spark, sf)
+  private def run(name: String) = SparkEntry.queries(name)(spark, sf)
 
   test("s_stream_ingest equals batch decode") {
     val streamed = run("s_stream_ingest")
