@@ -162,9 +162,10 @@ object Bench {
         graft.multimodal.Multimodal.imagePhash(spark, sfDir).count()
       }
       warm("daily-grids") {
-        graft.queries.StatsR9.dailyMean(spark, sfDir).count()
-        graft.queries.StatsR8e.dailyOhlc(spark, sfDir).count()
-        graft.queries.StatsR8f.dailyIdx(spark, sfDir).count()
+        graft.queries.DailyGrid.ret(spark, sfDir).count()
+        graft.queries.DailyGrid.marketRet(spark, sfDir).count()
+        graft.queries.DailyGrid.ohlc(spark, sfDir).count()
+        graft.queries.DailyGrid.centi(spark, sfDir).count()
         graft.queries.StatsR9za.handoff(spark, sfDir).count()
         graft.queries.StatsR9ze.custRev(spark, sfDir).count()
       }
@@ -186,20 +187,8 @@ object Bench {
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (name, _) =>
       only.forall(_.contains(name))
     }
-    val results = selected.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch {
-        case e: Throwable =>
-          // never silent: a failed query must be visible in the log
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          -1L
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // drop per-query persists: 99 queries in one session would
-      // otherwise accumulate leaked cached plans and degrade the tail
-      spark.catalog.clearCache()
-      name -> dt
-    }
+    val outcome = KeyLoop.run(spark, sfDir, "bench", selected)((_, df) => df.count())
+    val results = outcome.secs
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
@@ -217,7 +206,7 @@ object Bench {
     val warmQs = warmSecs.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val meta = s""""started":"$startedAt","loadavg_start":"$loadStart","loadavg_end":"${loadavg()}","skewed":$skewed"""
-    val json = s"""{"metric":"total","value":$total,"unit":"sec",$meta,"warm_total_sec":$warmTotal,"warm_sec":$warmQs,"queries":$qs,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec",$meta,"warm_total_sec":$warmTotal,"warm_sec":$warmQs,${outcome.failedJson()},"queries":$qs,"sf":"$sfDir"}"""
     Files.writeString(Paths.get(outFile), json + "\n")
     spark.stop()
     // The driver captures only the TAIL of the log (~3 KB): a full
@@ -225,7 +214,8 @@ object Bench {
     // the metric is lost (BENCH_r01/r02 both landed `parsed: null`).
     // So the sole final stdout line is COMPACT — headline total plus
     // only the timings big enough to matter (>= 0.25 s, 2dp), capped
-    // at the 40 slowest. The full-precision map lives in `outFile`.
+    // at the 40 slowest, and at most 20 failed key names. The
+    // full-precision map and every failed key live in `outFile`.
     // Locale.ROOT: a comma-decimal default locale would otherwise turn
     // "value":207.79 into invalid JSON and break the driver's parse.
     def r2(v: Double): String =
@@ -233,6 +223,6 @@ object Bench {
     val big = results.toSeq.filter(_._2 >= 0.25).sortBy(-_._2).take(40)
     val bigQs = big.map { case (k, v) => "\"" + k + "\":" + r2(v) }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${r2(total)},"unit":"sec","n_queries":${results.size},$meta,"warm_total_sec":${r2(warmTotal)},"queries":$bigQs,"queries_full":"$outFile","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${r2(total)},"unit":"sec","n_queries":${results.size},${outcome.failedJson(20)},$meta,"warm_total_sec":${r2(warmTotal)},"queries":$bigQs,"queries_full":"$outFile","sf":"$sfDir"}""")
   }
 }

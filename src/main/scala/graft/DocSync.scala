@@ -15,6 +15,10 @@ import java.nio.file.{Files, Paths}
   *      somewhere in SURVEY.md (the per-key contract row).
   *   4. Every oracled key's SQL is non-empty, and no oracle names a
   *      key that has no query (a dangling oracle would NPE in Verify).
+  *   5. The sha256 of every key's rendered oracle SQL matches its line
+  *      in tools/oracle_sql.sha256 (sorted `key<TAB>sha256`). A change
+  *      that moves code without touching an oracle leaves the file as
+  *      it is; one that changes an oracle edits its line and says why.
   *
   * Exit 0 = in sync; exit 1 prints every violation.
   */
@@ -72,12 +76,24 @@ object DocSync {
     if (empty.nonEmpty)
       errs += s"empty oracle SQL: ${empty.mkString(", ")}"
 
+    // 5. oracle fingerprint
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+    val rendered = o.toSeq.sortBy(_._1).map { case (k, sql) =>
+      k + "\t" + sha.digest(sql.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    }
+    val pinned = read("tools/oracle_sql.sha256").split("\n").toSeq.filter(_.nonEmpty)
+    val drift = (rendered.diff(pinned) ++ pinned.diff(rendered))
+      .map(_.takeWhile(_ != '\t')).distinct.sorted
+    if (drift.nonEmpty)
+      errs += s"oracle SQL differs from tools/oracle_sql.sha256 " +
+        s"(${drift.size}): ${drift.mkString(", ")}"
+
     if (errs.nonEmpty) {
       Console.err.println(s"[docsync] OUT OF SYNC (${errs.size}):")
       errs.foreach(e => Console.err.println(s"[docsync]   - $e"))
       sys.exit(1)
     }
     println(s"[docsync] OK: ${q.size} keys, ${o.size} oracled, " +
-      s"all keys documented in SURVEY.md")
+      s"all keys documented in SURVEY.md, oracle SQL matches its fingerprints")
   }
 }

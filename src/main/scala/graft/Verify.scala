@@ -2,7 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json for the DuckDB oracle compare
+  * (tools/compare.py) and verify.json with the keys that failed. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -21,15 +22,7 @@ object Verify {
     val selected =
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (n, _) => only(n) }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // drop per-query persists (no cross-query cache accumulation)
-      spark.catalog.clearCache()
-    }
+    dump(spark, sfDir, outDir, selected.toSeq.sortBy(_._1))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -46,5 +39,17 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+
+  /** Writes each key's result under `outDir/<key>` and the failed keys
+    * to `outDir/verify.json`. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           queries: Seq[(String, KeyLoop.Query)]): KeyLoop.Outcome = {
+    val outcome = KeyLoop.run(spark, sfDir, "verify", queries) { (name, df) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    }
+    Files.writeString(Paths.get(s"$outDir/verify.json"),
+      s"""{"n_keys":${queries.size},${outcome.failedJson()}}""" + "\n")
+    outcome
   }
 }

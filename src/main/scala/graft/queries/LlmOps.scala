@@ -409,10 +409,10 @@ object LlmOps {
       // exact
       val tau = 0.45
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      // cluster count from a one-row count (bounded by design) —
-      // operators/Cells keeps per-cluster size ≈ budget; the oracle
-      // computes the identical k in SQL
-      val k = graft.operators.Cells.k(e.count())
+      // cluster count from the footer row count — operators/Cells
+      // keeps per-cluster size ≈ budget; the oracle computes the
+      // identical k in SQL
+      val k = graft.operators.Cells.k(Tables.rowCount(s, d, "embeddings"))
       val packed = e.filter(col("vec_id").between(1, k))
         .select(col("vec_id").as("cid"), col("embedding").as("c"))
         .agg(array_sort(collect_list(struct(col("cid"), col("c")))).as("cents"))

@@ -108,12 +108,9 @@ object StatsR10 {
     // identity IS the contract: a jackknife machinery whose mean-case
     // output provably equals the classic SE.
     "q_jackknife" -> ((s, d) => {
-      val day = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(sum(round(col("value") * 100).cast("long")).as("c"))
-      day.groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum("c").as("st"),
-          sum(col("c").cast("decimal(38,0)") * col("c")).as("sc2"))
+      DailyGrid.centi(s, d).groupBy("event_type")
+        .agg(count(lit(1)).as("n"), sum("x").as("st"),
+          sum(col("x").cast("decimal(38,0)") * col("x")).as("sc2"))
         .filter(col("n") > 1)
         .select(col("event_type"), col("n").as("n_days"),
           round(col("st").cast("double") / col("n") / 100, 4)
@@ -165,13 +162,8 @@ object StatsR10 {
     // doubling; drift ⇒ it doesn't). Exact long bin sums and
     // successive differences; one division at the end.
     "q_allan_variance" -> ((s, d) => {
-      val day = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).as("c"))
-        .withColumn("t", row_number().over(
-          Window.partitionBy("event_type").orderBy("d")) - 1)
-        .localCheckpoint(eager = true) // three τ legs
-      import s.implicits._
+      val day = DailyGrid.mean(s, d)
+        .select(col("event_type"), col("cnt").as("c"), (col("i") - 1).as("t"))
       Seq(1L, 2L, 4L).map { tau =>
         val bins = day.withColumn("b", floor(col("t") / tau))
           .groupBy("event_type", "b")

@@ -43,11 +43,8 @@ object StatsR10b {
           |    'last', x.t,
           |    'n', acc.n + 1),
           |  a -> a)""".stripMargin
-      val day = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("dd"))
-        .agg(sum(round(col("value") * 100).cast("long")).as("c"))
-        .withColumn("t", row_number().over(
-          Window.partitionBy("event_type").orderBy("dd")).cast("long"))
+      val day = DailyGrid.centi(s, d)
+        .select(col("event_type"), col("x").as("c"), col("i").as("t"))
       val tot = day.groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("c").as("st"))
       day.join(broadcast(tot), "event_type")

@@ -16,6 +16,8 @@ import graft.tables.Tables
   */
 object StatsR10d {
 
+  import DailyGrid.{wo, wp}
+
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
 
@@ -69,12 +71,8 @@ object StatsR10d {
     // comparison — the whole robust decision path has zero doubles.
     // Emits flagged days only (the alert stream a monitor publishes).
     "q_rolling_mad" -> ((s, d) => {
-      val day = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(sum(round(col("value") * 100).cast("long")).as("x"))
-      val w7 = Window.partitionBy("event_type").orderBy("d")
-        .rowsBetween(-6, 0)
-      day
+      val w7 = wo.rowsBetween(-6, 0)
+      DailyGrid.centi(s, d)
         .withColumn("arr", collect_list("x").over(w7))
         .filter(size(col("arr")) === 7)
         .withColumn("med", expr("array_sort(arr)[3]"))
@@ -94,16 +92,8 @@ object StatsR10d {
     // unrolled weighted sum (α=0.3, identical literals) with exact
     // cleared OLS (b = (nΣiy−ΣiΣy)/(nΣi²−(Σi)²) on longs).
     "q_theta_forecast" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("dd"))
-        .agg(sum(floor(col("value") * 1e3).cast("long")).as("s_m"),
-          count(lit(1)).as("cnt"))
-        .withColumn("y", expr("s_m div cnt"))
-        .withColumn("i", row_number().over(
-          Window.partitionBy("event_type").orderBy("dd")).cast("long"))
-        .withColumn("n", count(lit(1)).over(
-          Window.partitionBy("event_type")))
-      daily
+      DailyGrid.mean(s, d)
+        .withColumn("n", count(lit(1)).over(wp))
         .withColumn("wgt",
           when(col("i") === 1,
             lit(0.3) * pow(lit(0.7), col("n") - col("i"))

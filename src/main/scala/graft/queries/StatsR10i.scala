@@ -1,10 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.tables.Tables
 
 /** Round-10 wave 10 (SURVEY.md §2 B.10b): range-based volatility
   * estimators over the daily OHLC grid — Parkinson, Garman-Klass,
@@ -23,25 +20,13 @@ import graft.tables.Tables
   */
 object StatsR10i {
 
-  /** Daily open/high/low/close centi grid per type (l > 0 gate so the
-    * log ranges are defined; the testdata values are positive, the
-    * gate makes the contract explicit).
-    */
-  private[queries] def ohlco(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .select(col("event_type"), to_date(col("ts")).as("d"),
-        round(col("value") * 100).cast("long").as("v_c"),
-        col("ts"), col("event_id"))
-      .groupBy("event_type", "d")
-      .agg(
-        min_by(col("v_c"), struct(col("ts"), col("event_id"))).as("o"),
-        max("v_c").as("h"), min("v_c").as("l"),
-        max_by(col("v_c"), struct(col("ts"), col("event_id"))).as("c"))
-      .filter(col("l") > 0)
+  import DailyGrid.{mktCte, retCte, wo}
 
-  /** µ-snapped log ranges on the OHLC grid (all longs). */
+  /** µ-snapped log ranges on the OHLC grid (all longs); the l > 0
+    * gate keeps the logs defined (the testdata values are positive,
+    * the gate makes the contract explicit). */
   private def ranges(s: SparkSession, d: String): DataFrame =
-    ohlco(s, d)
+    DailyGrid.ohlc(s, d).filter(col("l") > 0)
       .withColumn("hl_u",
         round(log(col("h").cast("double") / col("l")) * 1e6).cast("long"))
       .withColumn("co_u",
@@ -54,21 +39,6 @@ object StatsR10i {
         round(log(col("l").cast("double") / col("c")) * 1e6).cast("long"))
       .withColumn("lo_u",
         round(log(col("l").cast("double") / col("o")) * 1e6).cast("long"))
-
-  /** All-corpus market day returns (the q_beta_market series). */
-  private def marketRet(s: SparkSession, d: String): DataFrame =
-    // r13 opt: exact rollup of the session-memoized dailyMean grid
-    // (floor is per event — partial sums regroup losslessly)
-    StatsR9.dailyMean(s, d)
-      .groupBy("d")
-      .agg(sum("s_m").as("s_m"), sum("cnt").as("cnt"))
-      .withColumn("my", expr("s_m div cnt"))
-      // bounded grain: one row per day
-      .withColumn("pmy", lag("my", 1).over(Window.orderBy("d")))
-      .filter(col("pmy").isNotNull)
-      .select(col("d"),
-        round(log(col("my").cast("double") / col("pmy")) * 1e6)
-          .cast("long").as("rm_u"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
@@ -129,7 +99,6 @@ object StatsR10i {
     // Days are gated on a prior close (lag over the bounded day grid);
     // the three components ride exact long sums of u-snapped logs.
     "q_yang_zhang" -> ((s, d) => {
-      val wo = Window.partitionBy("event_type").orderBy("d")
       ranges(s, d)
         .withColumn("pc", lag("c", 1).over(wo))
         .filter(col("pc").isNotNull && col("pc") > 0)
@@ -174,7 +143,7 @@ object StatsR10i {
     // Reuses the q_beta_market exact-sum regression; the market series
     // is a one-row-per-day broadcast.
     "q_treynor" -> ((s, d) => {
-      StatsR9.dailyRet(s, d).join(broadcast(marketRet(s, d)), "d")
+      DailyGrid.ret(s, d).join(broadcast(DailyGrid.marketRet(s, d)), "d")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("r_u").as("sr"),
           sum("rm_u").as("sm"),
@@ -200,7 +169,7 @@ object StatsR10i {
     "q_downside_beta" -> ((s, d) => {
       val dn = col("rm_u") < 0
       val up = col("rm_u") > 0
-      StatsR9.dailyRet(s, d).join(broadcast(marketRet(s, d)), "d")
+      DailyGrid.ret(s, d).join(broadcast(DailyGrid.marketRet(s, d)), "d")
         .groupBy("event_type")
         .agg(
           sum(when(dn, 1L).otherwise(0L)).as("n_d"),
@@ -271,20 +240,6 @@ object StatsR10i {
       |    o, c
       |  FROM ohlco)""".stripMargin
 
-  /** Market day-return series (the q_beta_market mm/mret blocks). */
-  private val mktCte: String =
-    """mm AS (
-      |  SELECT CAST(ts AS DATE) AS d,
-      |    CAST(SUM(CAST(FLOOR(value * 1000) AS BIGINT)) // COUNT(*)
-      |      AS BIGINT) AS my
-      |  FROM events GROUP BY 1),
-      |mret AS (
-      |  SELECT d,
-      |    CAST(ROUND(ln(CAST(my AS DOUBLE) / pmy) * 1e6) AS BIGINT)
-      |      AS rm_u
-      |  FROM (SELECT d, my, lag(my) OVER (ORDER BY d) AS pmy FROM mm)
-      |  WHERE pmy IS NOT NULL)""".stripMargin
-
   val oracle: Map[String, String] = Map(
     "q_parkinson_vol" ->
       s"""WITH $ohlcoCte
@@ -353,7 +308,7 @@ object StatsR10i {
         |FROM v ORDER BY event_type""".stripMargin,
 
     "q_treynor" ->
-      s"""WITH ${StatsR9.retCte},
+      s"""WITH $retCte,
         |$mktCte,
         |g AS (
         |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
@@ -375,7 +330,7 @@ object StatsR10i {
         |FROM f ORDER BY event_type""".stripMargin,
 
     "q_downside_beta" ->
-      s"""WITH ${StatsR9.retCte},
+      s"""WITH $retCte,
         |$mktCte,
         |g AS (
         |  SELECT event_type,

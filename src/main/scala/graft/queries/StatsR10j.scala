@@ -18,11 +18,12 @@ import graft.tables.Tables
   * every statistic performs its double chain once per emitted row,
   * spelled identically in the oracle. All grids here are |types| or
   * |types|²/2 rows after one partial aggregation over events — at
-  * 100 TB the heavy pass is the map-side-combinable dailyMean rollup.
+  * 100 TB the heavy pass is the map-side-combinable DailyGrid.mean
+  * rollup.
   */
 object StatsR10j {
 
-  import StatsR9.dailyMean
+  import DailyGrid.wp
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
@@ -33,7 +34,7 @@ object StatsR10j {
     // (even/odd N branches spelled as CASE). Detects a shift in
     // either location or spread with one statistic.
     "q_lepage" -> ((s, d) => {
-      val dm = dailyMean(s, d).select(col("event_type"), col("d"), col("y"))
+      val dm = DailyGrid.mean(s, d).select(col("event_type"), col("d"), col("y"))
         .localCheckpoint(eager = true) // bounded day grid, 2 legs
       val pairs = dm.select(col("event_type").as("t1")).distinct()
         .join(dm.select(col("event_type").as("t2")).distinct(),
@@ -91,8 +92,7 @@ object StatsR10j {
       val w = Window.partitionBy("event_type")
         .orderBy(col("us"), col("event_id"))
       ev.withColumn("i", row_number().over(w).cast("long"))
-        .withColumn("n", count(lit(1)).over(
-          Window.partitionBy("event_type")))
+        .withColumn("n", count(lit(1)).over(wp))
         .groupBy("event_type")
         .agg(max("n").as("n"),
           max(col("i") * dayUs - col("n") * col("us")).as("dp_c"),
@@ -111,7 +111,7 @@ object StatsR10j {
     // exceeds t2's vs the reverse (ties dropped), z = (2·pos − n)/√n.
     // Exact long comparisons; one double chain per pair row.
     "q_sign_test" -> ((s, d) => {
-      val dm = dailyMean(s, d).select(col("event_type"), col("d"), col("y"))
+      val dm = DailyGrid.mean(s, d).select(col("event_type"), col("d"), col("y"))
         .localCheckpoint(eager = true) // two join legs
       dm.select(col("event_type").as("t1"), col("d"),
           col("y").as("y1"))
@@ -133,7 +133,7 @@ object StatsR10j {
     // answer q_anova's pooled MS assumes away. Per-group moments are
     // exact long sums; the k-row grid assembles in one second pass.
     "q_welch_anova" -> ((s, d) => {
-      val g = dailyMean(s, d)
+      val g = DailyGrid.mean(s, d)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("y").as("m"),
           sum(col("y") * col("y")).as("ss"))
@@ -171,11 +171,10 @@ object StatsR10j {
     // plain t-test's means absorb.
     "q_yuen_t" -> ((s, d) => {
       val w = Window.partitionBy("event_type").orderBy("y", "d")
-      val rows = dailyMean(s, d)
+      val rows = DailyGrid.mean(s, d)
         .select(col("event_type"), col("d"), col("y"))
         .withColumn("i", row_number().over(w).cast("long"))
-        .withColumn("n", count(lit(1)).over(
-          Window.partitionBy("event_type")))
+        .withColumn("n", count(lit(1)).over(wp))
         .withColumn("g", expr("n div 5"))
         .localCheckpoint(eager = true) // grid + boundary legs
       val bounds = rows.groupBy("event_type")

@@ -18,6 +18,8 @@ import graft.tables.Tables
   */
 object StatsR10l {
 
+  import DailyGrid.wp
+
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
 
@@ -59,8 +61,7 @@ object StatsR10l {
         .select(col("event_type"), col("event_id"),
           (unix_micros(col("ts")) % dayUs).as("us"))
         .withColumn("i", row_number().over(w).cast("long"))
-        .withColumn("n", count(lit(1)).over(
-          Window.partitionBy("event_type")))
+        .withColumn("n", count(lit(1)).over(wp))
         .withColumn("dnum", col("n") * 2 * col("us")
           - (col("i") * 2 - 1) * dayUs)
         .withColumn("t_u", round(

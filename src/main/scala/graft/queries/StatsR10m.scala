@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.tables.Tables
-
 /** Round-10 wave 14 (SURVEY.md §2 B.10/B.10b): graded ranking-eval
   * metrics (ERR, RBP) on the shared 1-in-17 neighbor ranking,
   * recommendation-list personalization, and the EWMA control chart.
@@ -17,6 +15,8 @@ import graft.tables.Tables
   * established there); chart moments come from exact milli sums.
   */
 object StatsR10m {
+
+  import DailyGrid.wo
 
   /** RBP (p=0.8) 1e9-snapped rank coefficients, ranks 1..10 —
     * computed once in Scala and interpolated into both engines.
@@ -118,11 +118,9 @@ object StatsR10m {
     // μ ± 3σ√(λ/(2−λ)(1−0.8^2t)) from exact milli moments; every day
     // emitted with its signed flag (0 inside the limits).
     "q_ewma_chart" -> ((s, d) => {
-      val wo = Window.partitionBy("event_type").orderBy("d")
       val wRun = wo.rowsBetween(Window.unboundedPreceding, 0)
-      val dm = StatsR9.dailyMean(s, d)
-        .select(col("event_type"), col("d"), col("y"))
-        .localCheckpoint(eager = true) // moment leg + chart leg
+      val dm = DailyGrid.mean(s, d)
+        .select(col("event_type"), col("d"), col("y"), col("i").as("t"))
       val mom = dm.groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("y").as("sm"),
           sum(col("y") * col("y")).as("ss"))
@@ -133,7 +131,6 @@ object StatsR10m {
             - col("sm").cast("double") * col("sm"))
             / col("n") / (col("n") - 1)).as("sd"))
       dm.join(broadcast(mom), "event_type")
-        .withColumn("t", row_number().over(wo).cast("long"))
         .withColumn("u", lit(0.2) * col("y") * pow(lit(0.8), -col("t")))
         .withColumn("z", pow(lit(0.8), col("t"))
           * (col("mu") + sum("u").over(wRun)))
@@ -249,11 +246,7 @@ object StatsR10m {
         |FROM pj""".stripMargin,
 
     "q_ewma_chart" ->
-      """WITH dm AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS d,
-        |    CAST(SUM(CAST(FLOOR(value * 1000) AS BIGINT)) // COUNT(*)
-        |      AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${DailyGrid.dmCte},
         |mom AS (
         |  SELECT event_type,
         |    CAST(SUM(y) AS BIGINT) / CAST(COUNT(*) AS DOUBLE) AS mu,

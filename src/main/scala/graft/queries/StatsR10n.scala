@@ -116,7 +116,7 @@ object StatsR10n {
     // are value-at-index selections (even n averages the two
     // middles), so ties cannot reorder the VALUE.
     "q_passing_bablok" -> ((s, d) => {
-      val dm = StatsR9.dailyMean(s, d)
+      val dm = DailyGrid.mean(s, d)
         .select(col("event_type"), col("d"), col("y"))
         .localCheckpoint(eager = true)
       val paired = dm.select(col("event_type").as("t1"), col("d"),
@@ -350,11 +350,7 @@ object StatsR10n {
         |FROM f ORDER BY a_id""".stripMargin,
 
     "q_passing_bablok" ->
-      """WITH dm AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS d,
-        |    CAST(SUM(CAST(FLOOR(value * 1000) AS BIGINT)) // COUNT(*)
-        |      AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${DailyGrid.dmCte},
         |paired AS (
         |  SELECT a.event_type AS t1, b.event_type AS t2, a.d,
         |    a.y AS x, b.y AS yy

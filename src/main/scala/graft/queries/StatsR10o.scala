@@ -18,6 +18,8 @@ import graft.tables.Tables
   */
 object StatsR10o {
 
+  import DailyGrid.wp
+
   /** Phi^-1(0.975) — the q_ctr_wilson constant, shared with the
     * oracle by string interpolation.
     */
@@ -97,10 +99,8 @@ object StatsR10o {
     // 29%. Both medians are value-at-index selections on the bounded
     // C(n,2) day grid.
     "q_siegel_slope" -> ((s, d) => {
-      val wo = Window.partitionBy("event_type").orderBy("d")
-      val pts = StatsR9.dailyMean(s, d)
-        .select(col("event_type"), col("d"), col("y"))
-        .withColumn("i", row_number().over(wo).cast("long"))
+      val pts = DailyGrid.mean(s, d)
+        .select(col("event_type"), col("d"), col("y"), col("i"))
         .localCheckpoint(eager = true) // two slope legs + intercept leg
       val sl = pts.select(col("event_type"), col("i").as("i1"),
           col("y").as("y1"))
@@ -122,8 +122,7 @@ object StatsR10o {
       val wOut = Window.partitionBy("event_type").orderBy("ms")
       val slope = med1
         .withColumn("r", row_number().over(wOut).cast("long"))
-        .withColumn("m", count(lit(1)).over(
-          Window.partitionBy("event_type")))
+        .withColumn("m", count(lit(1)).over(wp))
         .groupBy("event_type")
         .agg(max("m").as("n_pts"),
           avg(when(expr("(m % 2 = 1 AND r = (m + 1) div 2)" +
@@ -134,8 +133,7 @@ object StatsR10o {
         .select(col("event_type"), col("n_pts"), col("b"),
           (col("y") - col("b") * col("i")).as("ic"))
         .withColumn("r", row_number().over(wIc).cast("long"))
-        .withColumn("m", count(lit(1)).over(
-          Window.partitionBy("event_type")))
+        .withColumn("m", count(lit(1)).over(wp))
         .groupBy("event_type")
         .agg(max("n_pts").as("n_pts"),
           round(max("b") / 1e3, 6).as("slope_per_day"),
@@ -150,10 +148,10 @@ object StatsR10o {
     // errors_i/n_i, limits ū ± 3√(ū/n_i) with ū = Σx/Σn from exact
     // counts; every day emitted with its signed flag.
     "q_u_chart" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("event_type") === "error", 1L).otherwise(0L))
+      val daily = DailyGrid.mean(s, d)
+        .groupBy("d")
+        .agg(sum("cnt").as("n"),
+          sum(when(col("event_type") === "error", col("cnt")).otherwise(0L))
             .as("x"))
         .localCheckpoint(eager = true) // center leg + chart leg
       val c = daily.agg(sum("x").as("tx"), sum("n").as("tn"))
@@ -255,11 +253,7 @@ object StatsR10o {
         |FROM f ORDER BY annual_demand DESC, partkey LIMIT 25""".stripMargin,
 
     "q_siegel_slope" ->
-      """WITH dm AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS d,
-        |    CAST(SUM(CAST(FLOOR(value * 1000) AS BIGINT)) // COUNT(*)
-        |      AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${DailyGrid.dmCte},
         |pts AS (
         |  SELECT event_type, y,
         |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY d)

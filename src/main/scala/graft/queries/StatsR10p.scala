@@ -16,12 +16,14 @@ import org.apache.spark.sql.functions._
   */
 object StatsR10p {
 
+  import DailyGrid.wp
+
   /** Phi^-1(0.975), shared with oracles by interpolation. */
   private val z975 = 1.959963984540054
 
   /** Per-type exact moments of daily milli means (shared CTE). */
   private def mom(s: SparkSession, d: String): DataFrame =
-    StatsR9.dailyMean(s, d)
+    DailyGrid.mean(s, d)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("y").as("m"),
         sum(col("y") * col("y")).as("ss"))
@@ -31,11 +33,7 @@ object StatsR10p {
       .withColumn("xb", col("m").cast("double") / col("n"))
 
   private val momCte: String =
-    """dm AS (
-      |  SELECT event_type, CAST(ts AS DATE) AS d,
-      |    CAST(SUM(CAST(FLOOR(value * 1000) AS BIGINT)) // COUNT(*)
-      |      AS BIGINT) AS y
-      |  FROM events GROUP BY 1, 2),
+    s"""${DailyGrid.dmCte},
       |mom AS (
       |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
       |    (CAST(COUNT(*) AS DOUBLE) * SUM(y * y)
@@ -112,11 +110,10 @@ object StatsR10p {
     // = the value-at-index middle. No normality assumed anywhere.
     "q_median_ci" -> ((s, d) => {
       val w = Window.partitionBy("event_type").orderBy("y", "d")
-      StatsR9.dailyMean(s, d)
+      DailyGrid.mean(s, d)
         .select(col("event_type"), col("d"), col("y"))
         .withColumn("i", row_number().over(w).cast("long"))
-        .withColumn("n", count(lit(1)).over(
-          Window.partitionBy("event_type")))
+        .withColumn("n", count(lit(1)).over(wp))
         .withColumn("lo_i", greatest(lit(1L),
           floor((col("n") - lit(z975) * sqrt(col("n").cast("double")))
             / 2).cast("long")))
@@ -141,10 +138,8 @@ object StatsR10p {
     // h = n div 2 + 1). |diffs| are exact longs; both selections are
     // value-at-index; the classical sd rides alongside for contrast.
     "q_sn_qn_scale" -> ((s, d) => {
-      val wo = Window.partitionBy("event_type").orderBy("d")
-      val pts = StatsR9.dailyMean(s, d)
-        .select(col("event_type"), col("d"), col("y"))
-        .withColumn("i", row_number().over(wo).cast("long"))
+      val pts = DailyGrid.mean(s, d)
+        .select(col("event_type"), col("d"), col("y"), col("i"))
         .localCheckpoint(eager = true)
       val diffs = pts.select(col("event_type"), col("i").as("i1"),
           col("y").as("y1"))
@@ -167,8 +162,7 @@ object StatsR10p {
       val wOut = Window.partitionBy("event_type").orderBy("md")
       val sn = inner
         .withColumn("r", row_number().over(wOut).cast("long"))
-        .withColumn("m", count(lit(1)).over(
-          Window.partitionBy("event_type")))
+        .withColumn("m", count(lit(1)).over(wp))
         .groupBy("event_type")
         .agg(max("m").as("n_pts"),
           avg(when(expr("(m % 2 = 1 AND r = (m + 1) div 2)" +
@@ -239,11 +233,7 @@ object StatsR10p {
         |FROM f ORDER BY t1, t2""".stripMargin,
 
     "q_median_ci" ->
-      s"""WITH dm AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS d,
-        |    CAST(SUM(CAST(FLOOR(value * 1000) AS BIGINT)) // COUNT(*)
-        |      AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${DailyGrid.dmCte},
         |r AS (
         |  SELECT event_type, y,
         |    CAST(row_number() OVER (PARTITION BY event_type

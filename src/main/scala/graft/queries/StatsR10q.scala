@@ -20,6 +20,8 @@ import graft.tables.Tables
   */
 object StatsR10q {
 
+  import DailyGrid.{wo, wp}
+
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
 
@@ -60,14 +62,10 @@ object StatsR10q {
     // α = the 3-point log-log slope — the long-memory exponent
     // (α≈0.5 white, α≈1 1/f).
     "q_dfa" -> ((s, d) => {
-      val wo = Window.partitionBy("event_type").orderBy("d")
-      val base = StatsR9.dailyMean(s, d)
-        .select(col("event_type"), col("d"), col("y"))
-        .withColumn("k", row_number().over(wo).cast("long"))
-        .withColumn("n", count(lit(1)).over(
-          Window.partitionBy("event_type")))
-        .withColumn("m", sum("y").over(
-          Window.partitionBy("event_type")))
+      val base = DailyGrid.mean(s, d)
+        .select(col("event_type"), col("d"), col("y"), col("i").as("k"))
+        .withColumn("n", count(lit(1)).over(wp))
+        .withColumn("m", sum("y").over(wp))
         .withColumn("cum", sum("y").over(
           wo.rowsBetween(Window.unboundedPreceding, 0)))
         .withColumn("p", col("n") * col("cum") - col("k") * col("m"))
@@ -232,11 +230,7 @@ object StatsR10q {
         |FROM f ORDER BY label""".stripMargin,
 
     "q_dfa" ->
-      """WITH dm AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS d,
-        |    CAST(SUM(CAST(FLOOR(value * 1000) AS BIGINT)) // COUNT(*)
-        |      AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${DailyGrid.dmCte},
         |prof AS (
         |  SELECT event_type,
         |    CAST(row_number() OVER w AS BIGINT) AS k,

@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Round-10 wave 19 (SURVEY.md §2 B.10/B.10b): AR(2) Yule-Walker fit
@@ -14,6 +13,8 @@ import org.apache.spark.sql.functions._
   */
 object StatsR10r {
 
+  import DailyGrid.wo
+
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
 
@@ -23,8 +24,7 @@ object StatsR10r {
     // variance ratio 1 − φ1r1 − φ2r2 — the two-lag memory q_ar1_fit
     // cannot see.
     "q_ar2_yw" -> ((s, d) => {
-      val wo = Window.partitionBy("event_type").orderBy("d")
-      StatsR9.dailyRet(s, d)
+      DailyGrid.ret(s, d)
         .withColumn("x1", lead("r_u", 1).over(wo))
         .withColumn("x2", lead("r_u", 2).over(wo))
         .groupBy("event_type")
@@ -98,7 +98,7 @@ object StatsR10r {
 
   val oracle: Map[String, String] = Map(
     "q_ar2_yw" ->
-      s"""WITH ${StatsR9.retCte},
+      s"""WITH ${DailyGrid.retCte},
         |lagged AS (
         |  SELECT event_type, r_u,
         |    lead(r_u, 1) OVER w AS x1,

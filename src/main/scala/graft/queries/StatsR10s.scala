@@ -141,7 +141,7 @@ object StatsR10s {
     // quadratic recursive CTE; pinned by the R10sOpsSpec fold.
     "q_dtw_pairs" -> ((s, d) => {
       graft.expr.Registry.ensure(s)
-      val series = StatsR9.dailyMean(s, d)
+      val series = DailyGrid.mean(s, d)
         .groupBy("event_type")
         .agg(array_agg(struct(col("d"), col("y"))).as("rows"))
         .select(col("event_type"),

@@ -17,6 +17,8 @@ import graft.tables.Tables
   */
 object StatsR10v {
 
+  import DailyGrid.wp
+
   /** Per-type centi values ranked ascending (shared by u-pickers). */
   private def ranked(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
@@ -26,8 +28,7 @@ object StatsR10v {
       .withColumn("i", row_number().over(Window
         .partitionBy("event_type").orderBy("vc", "event_id"))
         .cast("long"))
-      .withColumn("n", count(lit(1)).over(
-        Window.partitionBy("event_type")))
+      .withColumn("n", count(lit(1)).over(wp))
 
   private val rankedCte: String =
     """r AS (

@@ -17,11 +17,10 @@ import org.apache.spark.sql.functions._
   */
 object StatsR10w {
 
-  import StatsR9.dailyMean
 
   /** Paired daily milli means for every ordered/unordered type pair. */
   private def paired(s: SparkSession, d: String): DataFrame = {
-    val dm = dailyMean(s, d).select(col("event_type"), col("d"), col("y"))
+    val dm = DailyGrid.mean(s, d).select(col("event_type"), col("d"), col("y"))
       .localCheckpoint(eager = true)
     dm.select(col("event_type").as("t1"), col("d"), col("y").as("x"))
       .join(dm.select(col("event_type").as("t2"), col("d"),
@@ -82,7 +81,7 @@ object StatsR10w {
     // the end) — the distribution-shift distance JSD's binning
     // approximates.
     "q_wasserstein" -> ((s, d) => {
-      val dm = dailyMean(s, d)
+      val dm = DailyGrid.mean(s, d)
         .select(col("event_type"), col("y"))
         .localCheckpoint(eager = true)
       val pairs = dm.select(col("event_type").as("t1")).distinct()
@@ -124,7 +123,7 @@ object StatsR10w {
     // — rank-based like Mann-Whitney but weighting the tails, where
     // location shifts hide.
     "q_bws_test" -> ((s, d) => {
-      val dm = dailyMean(s, d).select(col("event_type"), col("d"), col("y"))
+      val dm = DailyGrid.mean(s, d).select(col("event_type"), col("d"), col("y"))
         .localCheckpoint(eager = true)
       val pairs = dm.select(col("event_type").as("t1")).distinct()
         .join(dm.select(col("event_type").as("t2")).distinct(),

@@ -18,6 +18,8 @@ import graft.tables.Tables
   */
 object StatsR10x {
 
+  import DailyGrid.{wo, wp}
+
   /** Phi^-1(0.975) interpolated into oracles. */
   private val z975 = 1.959963984540054
 
@@ -69,13 +71,12 @@ object StatsR10x {
     // τ_xy·z = (τxy − τxz·τyz)/√((1−τxz²)(1−τyz²)) — dependence with
     // the confounder partialled out.
     "q_partial_tau" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(sum(floor(col("value") * 1e3).cast("long")).as("sv"),
-          count(lit(1)).as("cnt"),
-          sum(when(col("event_type") === "click", 1L).otherwise(0L))
+      val daily = DailyGrid.mean(s, d)
+        .groupBy("d")
+        .agg(sum("s_m").as("sv"), sum("cnt").as("cnt"),
+          sum(when(col("event_type") === "click", col("cnt")).otherwise(0L))
             .as("ck"),
-          sum(when(col("event_type") === "error", 1L).otherwise(0L))
+          sum(when(col("event_type") === "error", col("cnt")).otherwise(0L))
             .as("er"))
         .select(col("d"), expr("sv div cnt").as("x"),
           expr("CAST(ck * 1000000 div cnt AS BIGINT)").as("y"),
@@ -111,12 +112,11 @@ object StatsR10x {
     // mobility(Δy)/mobility(y) — the three-number EEG-style signal
     // summary, all from exact long first/second differences.
     "q_hjorth" -> ((s, d) => {
-      val wo = Window.partitionBy("event_type").orderBy("d")
       def popvar(v: org.apache.spark.sql.Column,
           n: org.apache.spark.sql.Column,
           sm: org.apache.spark.sql.Column) =
         (n.cast("double") * v - sm.cast("double") * sm) / n / n
-      StatsR9.dailyMean(s, d)
+      DailyGrid.mean(s, d)
         .withColumn("d1", col("y") - lag("y", 1).over(wo))
         .withColumn("d2", col("d1") - lag("d1", 1).over(wo))
         .groupBy("event_type")
@@ -150,9 +150,7 @@ object StatsR10x {
     // var = n(n−1)(2n+5)/18 (no-ties form, stated) — the robust
     // trend plus the interval q_theil_sen alone doesn't give.
     "q_theilsen_ci" -> ((s, d) => {
-      val wo = Window.partitionBy("event_type").orderBy("d")
-      val pts = StatsR9.dailyMean(s, d)
-        .withColumn("i", row_number().over(wo).cast("long"))
+      val pts = DailyGrid.mean(s, d)
         .localCheckpoint(eager = true)
       val slopes = pts.select(col("event_type"), col("i").as("i1"),
           col("y").as("y1"))
@@ -164,8 +162,7 @@ object StatsR10x {
       val ws = Window.partitionBy("event_type").orderBy("sl")
       slopes
         .withColumn("r", row_number().over(ws).cast("long"))
-        .withColumn("nn", count(lit(1)).over(
-          Window.partitionBy("event_type")))
+        .withColumn("nn", count(lit(1)).over(wp))
         .withColumn("n", (lit(1.0)
           + sqrt(lit(1.0) + lit(8.0) * col("nn"))) / 2) // n from C(n,2)
         .withColumn("cz", lit(z975) * sqrt(col("n") * (col("n") - 1)
@@ -297,11 +294,7 @@ object StatsR10x {
         |FROM t""".stripMargin,
 
     "q_hjorth" ->
-      """WITH dm AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS d,
-        |    CAST(SUM(CAST(FLOOR(value * 1000) AS BIGINT)) // COUNT(*)
-        |      AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${DailyGrid.dmCte},
         |dd AS (
         |  SELECT event_type, y,
         |    y - lag(y) OVER w AS d1,
@@ -341,11 +334,7 @@ object StatsR10x {
         |FROM v ORDER BY event_type""".stripMargin,
 
     "q_theilsen_ci" ->
-      s"""WITH dm AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS d,
-        |    CAST(SUM(CAST(FLOOR(value * 1000) AS BIGINT)) // COUNT(*)
-        |      AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${DailyGrid.dmCte},
         |pts AS (
         |  SELECT event_type, y,
         |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY d)

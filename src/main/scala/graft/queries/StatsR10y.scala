@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.tables.Tables
@@ -13,6 +12,8 @@ import graft.tables.Tables
   * window).
   */
 object StatsR10y {
+
+  import DailyGrid.wo
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
@@ -26,8 +27,7 @@ object StatsR10y {
     // the R10yOpsSpec reference fold.
     "q_lz76_series" -> ((s, d) => {
       graft.expr.Registry.ensure(s)
-      val wo = Window.partitionBy("event_type").orderBy("d")
-      StatsR9.dailyMean(s, d)
+      DailyGrid.mean(s, d)
         .withColumn("py", lag("y", 1).over(wo))
         .filter(col("py").isNotNull)
         .withColumn("sym", signum((col("y") - col("py")).cast("double"))

@@ -19,6 +19,8 @@ import graft.tables.Tables
   */
 object StatsR8 {
 
+  import DailyGrid.wo
+
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
 
@@ -158,14 +160,8 @@ object StatsR8 {
     // division is IEEE. One corpus partial agg; lag via a
     // per-type-partitioned window over the bounded day grid.
     "q_ar1_fit" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(sum(floor(col("value") * 1e3).cast("long")).as("s_m"),
-          count(lit(1)).as("n"))
-        .withColumn("y", expr("s_m div n"))
-      val lagged = daily
-        .withColumn("x", lag("y", 1).over(
-          Window.partitionBy("event_type").orderBy("d")))
+      val lagged = DailyGrid.mean(s, d)
+        .withColumn("x", lag("y", 1).over(wo))
         .filter(col("x").isNotNull)
       lagged.groupBy("event_type")
         .agg(count(lit(1)).as("np"), sum("x").as("sx"), sum("y").as("sy"),
@@ -472,23 +468,16 @@ object StatsR8 {
     // deterministic IEEE), S = population sd. The corpus collapses to
     // the bounded day grid first; everything after is window math.
     "q_hurst" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(sum(floor(col("value") * 1e3).cast("long")).as("s_m"),
-          count(lit(1)).as("cnt"))
-        .withColumn("y", expr("s_m div cnt"))
+      val daily = DailyGrid.mean(s, d)
       val stats = daily.groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("y").as("sy"),
           sum(col("y") * col("y")).as("syy"))
         .withColumn("mean", col("sy").cast("double") / col("n"))
         .withColumn("sd", sqrt(col("syy").cast("double") / col("n")
           - col("mean") * col("mean")))
-      val wp = Window.partitionBy("event_type").orderBy("d")
-        .rowsBetween(Window.unboundedPreceding, 0)
       daily
-        .withColumn("i", row_number().over(
-          Window.partitionBy("event_type").orderBy("d")))
-        .withColumn("pre", sum("y").over(wp))
+        .withColumn("pre", sum("y").over(
+          wo.rowsBetween(Window.unboundedPreceding, 0)))
         .join(broadcast(stats), "event_type")
         .withColumn("dev", col("pre") - col("i") * col("mean"))
         .groupBy("event_type")
@@ -507,15 +496,9 @@ object StatsR8 {
     // before anything fancier. Exact milli daily means; the error
     // sums are exact longs.
     "q_mase_seasonal" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(sum(floor(col("value") * 1e3).cast("long")).as("s_m"),
-          count(lit(1)).as("cnt"))
-        .withColumn("y", expr("s_m div cnt"))
-      val w = Window.partitionBy("event_type").orderBy("d")
-      daily
-        .withColumn("l1", lag("y", 1).over(w))
-        .withColumn("l7", lag("y", 7).over(w))
+      DailyGrid.mean(s, d)
+        .withColumn("l1", lag("y", 1).over(wo))
+        .withColumn("l7", lag("y", 7).over(wo))
         .filter(col("l7").isNotNull)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_terms"),
@@ -534,13 +517,7 @@ object StatsR8 {
     // of engine corr()). The lag pairs come from a self-join on the
     // bounded day grid; one corpus partial agg feeds everything.
     "q_pacf" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(sum(floor(col("value") * 1e3).cast("long")).as("s_m"),
-          count(lit(1)).as("cnt"))
-        .withColumn("y", expr("s_m div cnt"))
-        .withColumn("i", row_number().over(Window.orderBy("d")))
-        .localCheckpoint(eager = true) // bounded day grid, 2 legs
+      val daily = DailyGrid.market(s, d)
       def rAt(k: Int): Column = {
         // Pearson r of (y_i, y_{i+k}) — scalar subquery per lag over
         // the bounded grid; exact long moments

@@ -15,6 +15,8 @@ import graft.tables.Tables
   */
 object StatsR8b {
 
+  import DailyGrid.wp
+
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
 
@@ -271,8 +273,7 @@ object StatsR8b {
       val w = Window.partitionBy("event_type")
         .orderBy(col("v"), col("event_id"))
       ev.withColumn("rn", row_number().over(w))
-        .withColumn("n", count(lit(1)).over(
-          Window.partitionBy("event_type")))
+        .withColumn("n", count(lit(1)).over(wp))
         .withColumn("cut", (col("n") / 10).cast("long"))
         .filter(col("rn") > col("cut") && col("rn") <= col("n") - col("cut"))
         .groupBy("event_type")
@@ -294,15 +295,8 @@ object StatsR8b {
       // pow amplifies the gap; the oracle spells the same literals
       val alpha = 0.3
       val beta = 0.7
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(sum(floor(col("value") * 1e3).cast("long")).as("s_m"),
-          count(lit(1)).as("cnt"))
-        .withColumn("y", expr("s_m div cnt"))
-        .withColumn("i", row_number().over(
-          Window.partitionBy("event_type").orderBy("d")))
-        .withColumn("n", count(lit(1)).over(
-          Window.partitionBy("event_type")))
+      val daily = DailyGrid.mean(s, d)
+        .withColumn("n", count(lit(1)).over(wp))
       daily
         .withColumn("wgt",
           when(col("i") === 1,

@@ -16,6 +16,8 @@ import graft.tables.Tables
   */
 object StatsR8c {
 
+  import DailyGrid.wo
+
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
 
@@ -25,13 +27,9 @@ object StatsR8c {
     // exact concordant/discordant/tie counts, tie-corrected
     // denominator. One corpus partial agg; the pair join is day².
     "q_kendall_tau" -> ((s, d) => {
-      val daily = Tables.events(s, d)
+      val wide = DailyGrid.mean(s, d)
         .filter(col("event_type").isin("click", "view"))
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(sum(floor(col("value") * 1e3).cast("long")).as("s_m"),
-          count(lit(1)).as("cnt"))
-        .withColumn("y", expr("s_m div cnt"))
-      val wide = daily.groupBy("d")
+        .groupBy("d")
         .agg(max(when(col("event_type") === "click", col("y"))).as("x"),
           max(when(col("event_type") === "view", col("y"))).as("y"))
         .filter(col("x").isNotNull && col("y").isNotNull)
@@ -155,14 +153,8 @@ object StatsR8c {
     // RSI = 100·ΣG/(ΣG+ΣL) needs one division. Rows only where the
     // frame is full.
     "q_rsi" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(sum(floor(col("value") * 1e3).cast("long")).as("s_m"),
-          count(lit(1)).as("cnt"))
-        .withColumn("y", expr("s_m div cnt"))
-      val wo = Window.partitionBy("event_type").orderBy("d")
       val wf = wo.rowsBetween(-13, 0)
-      daily
+      DailyGrid.mean(s, d)
         .withColumn("diff", col("y") - lag("y", 1).over(wo))
         .filter(col("diff").isNotNull)
         .withColumn("gain", when(col("diff") > 0, col("diff")).otherwise(0L))

@@ -13,6 +13,8 @@ import graft.tables.Tables
   */
 object StatsR8d {
 
+  import DailyGrid.wo
+
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
 
@@ -51,11 +53,8 @@ object StatsR8d {
     // span bounds — the data-completeness audit a daily pipeline
     // runs before trusting any time series.
     "q_gaps_islands" -> ((s, d) => {
-      val wo = Window.partitionBy("event_type").orderBy("d")
-      Tables.events(s, d)
-        .select(col("event_type"), to_date(col("ts")).as("d")).distinct()
-        .withColumn("grp",
-          expr("date_sub(d, row_number() OVER (PARTITION BY event_type ORDER BY d))"))
+      DailyGrid.mean(s, d)
+        .withColumn("grp", date_sub(col("d"), col("i").cast("int")))
         .groupBy("event_type", "grp")
         .agg(min("d").as("island_start"), max("d").as("island_end"),
           count(lit(1)).as("n_days"))
@@ -70,11 +69,9 @@ object StatsR8d {
     // join (day × 14 offsets) instead of the unstable λ^t rescaling
     // trick; terms snap to the µ grid before the sum. Day grid only.
     "q_adstock" -> ((s, d) => {
-      val daily = Tables.events(s, d)
+      val daily = DailyGrid.mean(s, d)
         .filter(col("event_type") === "purchase")
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(sum(floor(col("value") * 1e3).cast("long")).as("y"))
-        .localCheckpoint(eager = true) // bounded day grid, 2 legs
+        .select(col("d"), col("s_m").as("y"))
       val lags = s.range(0, 14).select(col("id").cast("int").as("j"))
       daily.crossJoin(broadcast(lags))
         .select(expr("date_add(d, j)").as("d"), col("j"), col("y"))
@@ -229,17 +226,11 @@ object StatsR8d {
     // (drawdown desc, day asc) — the risk statistic behind the OHLC
     // family. Day-grid windows only.
     "q_max_drawdown" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(sum(floor(col("value") * 1e3).cast("long")).as("s_m"),
-          count(lit(1)).as("cnt"))
-        .withColumn("y", expr("s_m div cnt"))
-      val wp = Window.partitionBy("event_type").orderBy("d")
-        .rowsBetween(Window.unboundedPreceding, 0)
       val wpick = Window.partitionBy("event_type")
         .orderBy(col("dd_u").desc, col("d"))
-      daily
-        .withColumn("peak", max("y").over(wp))
+      DailyGrid.mean(s, d)
+        .withColumn("peak", max("y").over(
+          wo.rowsBetween(Window.unboundedPreceding, 0)))
         .withColumn("dd_u", round((col("peak") - col("y")) * 1e9
           / col("peak")).cast("long"))
         .withColumn("rn", row_number().over(wpick))
@@ -350,17 +341,7 @@ object StatsR8d {
     // from exact snapped moments, Sharpe = mean/sd·√365 (rf = 0,
     // stated). The finance companion of q_max_drawdown.
     "q_volatility" -> ((s, d) => {
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(sum(floor(col("value") * 1e3).cast("long")).as("s_m"),
-          count(lit(1)).as("cnt"))
-        .withColumn("y", expr("s_m div cnt"))
-      val wo = Window.partitionBy("event_type").orderBy("d")
-      daily
-        .withColumn("prev", lag("y", 1).over(wo))
-        .filter(col("prev").isNotNull)
-        .withColumn("r_u", round(log(col("y").cast("double")
-          / col("prev")) * 1e6).cast("long"))
+      DailyGrid.ret(s, d)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_ret"), sum("r_u").as("sr"),
           sum(col("r_u") * col("r_u")).as("qr"))

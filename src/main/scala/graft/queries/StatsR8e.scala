@@ -15,25 +15,7 @@ import graft.tables.Tables
   */
 object StatsR8e {
 
-  /** Shared daily OHLC rollup in exact centi longs: high/low by
-    * min/max, close = value of the (ts, event_id)-max row (the same
-    * deterministic last-row rule q_ohlc_resample uses), volume =
-    * event count. One partial agg over the corpus; output is
-    * |types|·|days| rows. */
-  // session-memoized (r13 opt): 22 call sites re-ran this events scan
-  // + partial agg per key; deterministic (max_by tie-broken by the
-  // total (ts, event_id) struct), so the memo is byte-identical
-  private[graft] def dailyOhlc(s: SparkSession, d: String): DataFrame =
-    graft.util.SessionMemo.of(s, s"dailyOhlc:$d") {
-      Tables.events(s, d)
-        .select(col("event_type"), to_date(col("ts")).as("d"),
-          round(col("value") * 100).cast("long").as("v_c"),
-          col("ts"), col("event_id"))
-        .groupBy("event_type", "d")
-        .agg(max("v_c").as("h"), min("v_c").as("l"),
-          max_by(col("v_c"), struct(col("ts"), col("event_id"))).as("c"),
-          count(lit(1)).as("vol"))
-    }
+  import DailyGrid.{dailyCte, wo}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
@@ -43,9 +25,8 @@ object StatsR8e {
     // only. The breakout flag compares the exact close against the
     // double bands with the identical expression in the oracle.
     "q_bollinger" -> ((s, d) => {
-      val w7 = Window.partitionBy("event_type").orderBy("d")
-        .rowsBetween(-6, 0)
-      dailyOhlc(s, d)
+      val w7 = wo.rowsBetween(-6, 0)
+      DailyGrid.ohlc(s, d)
         .withColumn("n7", count(lit(1)).over(w7))
         .withColumn("sm", sum("c").over(w7))
         .withColumn("sq", sum(col("c") * col("c")).over(w7))
@@ -71,9 +52,8 @@ object StatsR8e {
     // null first-day lag in BOTH engines, so day 1 degrades to
     // h−l), ATR = full-window rolling mean.
     "q_atr" -> ((s, d) => {
-      val wo = Window.partitionBy("event_type").orderBy("d")
       val w7 = wo.rowsBetween(-6, 0)
-      dailyOhlc(s, d)
+      DailyGrid.ohlc(s, d)
         .withColumn("pc", lag("c", 1).over(wo))
         .withColumn("tr", greatest(col("h") - col("l"),
           abs(col("h") - col("pc")), abs(col("l") - col("pc"))))
@@ -89,8 +69,7 @@ object StatsR8e {
     // On-balance volume: sign of the daily close change × volume,
     // accumulated — all exact integers, one prefix-sum window.
     "q_obv" -> ((s, d) => {
-      val wo = Window.partitionBy("event_type").orderBy("d")
-      dailyOhlc(s, d)
+      DailyGrid.ohlc(s, d)
         .withColumn("dir", coalesce(
           signum(col("c") - lag("c", 1).over(wo)).cast("long"), lit(0L)))
         .withColumn("obv", sum(col("dir") * col("vol"))
@@ -105,11 +84,9 @@ object StatsR8e {
     // snapped %K — so the smoothing runs on exact integers. Both
     // windows gate on full history.
     "q_stochastic" -> ((s, d) => {
-      val w14 = Window.partitionBy("event_type").orderBy("d")
-        .rowsBetween(-13, 0)
-      val w3 = Window.partitionBy("event_type").orderBy("d")
-        .rowsBetween(-2, 0)
-      dailyOhlc(s, d)
+      val w14 = wo.rowsBetween(-13, 0)
+      val w3 = wo.rowsBetween(-2, 0)
+      DailyGrid.ohlc(s, d)
         .withColumn("n14", count(lit(1)).over(w14))
         .withColumn("h14", max("h").over(w14))
         .withColumn("l14", min("l").over(w14))
@@ -130,13 +107,10 @@ object StatsR8e {
     // (daily totals keep n·Σab far inside long range), one double
     // expression per emitted day. The day-grid join is |days| rows.
     "q_rolling_corr" -> ((s, d) => {
-      def dtot(t: String, alias: String) = Tables.events(s, d)
-        .filter(col("event_type") === t)
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(sum(round(col("value") * 100).cast("long")).as(alias))
       // bounded grain: one row per day
       val w14 = Window.orderBy("d").rowsBetween(-13, 0)
-      dtot("click", "a").join(dtot("view", "b"), "d")
+      DailyGrid.centiOf(s, d, "click", "a")
+        .join(DailyGrid.centiOf(s, d, "view", "b"), "d")
         .withColumn("n", count(lit(1)).over(w14))
         .withColumn("sa", sum("a").over(w14))
         .withColumn("sb", sum("b").over(w14))
@@ -260,9 +234,7 @@ object StatsR8e {
     // per type: D = s²/mean over the bounded day grid, χ² = (k−1)·D —
     // the overdispersion gate before any Poisson rate model.
     "q_poisson_gof" -> ((s, d) =>
-      Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).as("c"))
+      DailyGrid.mean(s, d).select(col("event_type"), col("cnt").as("c"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("k"), sum("c").as("n"),
           sum(col("c") * col("c")).as("q"))
@@ -279,28 +251,6 @@ object StatsR8e {
             .as("chi2"))
         .orderBy("event_type"))
   )
-
-  /** Shared daily-OHLC CTE for the oracle side: row_number picks the
-    * identical (ts, event_id)-max close row max_by selects. */
-  private[queries] val dailyCte: String =
-    """base AS (
-      |  SELECT event_type, CAST(ts AS DATE) AS d,
-      |    CAST(ROUND(value * 100) AS BIGINT) AS v_c, ts, event_id
-      |  FROM events),
-      |agg AS (
-      |  SELECT event_type, d, MAX(v_c) AS h, MIN(v_c) AS l,
-      |    CAST(COUNT(*) AS BIGINT) AS vol
-      |  FROM base GROUP BY 1, 2),
-      |cl AS (
-      |  SELECT event_type, d, v_c AS c FROM (
-      |    SELECT event_type, d, v_c, row_number() OVER (
-      |      PARTITION BY event_type, d ORDER BY ts DESC, event_id DESC)
-      |      AS rn
-      |    FROM base) WHERE rn = 1),
-      |daily AS (
-      |  SELECT agg.event_type, agg.d, h, l, c, vol
-      |  FROM agg JOIN cl ON agg.event_type = cl.event_type
-      |    AND agg.d = cl.d)""".stripMargin
 
   val oracle: Map[String, String] = Map(
     // identical exact centi sums and double band expressions

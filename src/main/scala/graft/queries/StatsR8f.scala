@@ -14,25 +14,7 @@ import graft.tables.Tables
   */
 object StatsR8f {
 
-  /** Daily centi total of one event type — the paired-series grain
-    * the signed-rank and correlation diagnostics share. */
-  private def dtot(s: SparkSession, d: String, t: String, alias: String) =
-    Tables.events(s, d)
-      .filter(col("event_type") === t)
-      .groupBy(to_date(col("ts")).as("d"))
-      .agg(sum(round(col("value") * 100).cast("long")).as(alias))
-
-  /** Daily centi total per type with a 1-based day index. */
-  // session-memoized (r13 opt): the centi-sum day grid re-ran the
-  // events scan per consumer; deterministic exact longs either way
-  private[graft] def dailyIdx(s: SparkSession, d: String): DataFrame =
-    graft.util.SessionMemo.of(s, s"dailyIdxCenti:$d") {
-      Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(sum(round(col("value") * 100).cast("long")).as("x"))
-        .withColumn("i", row_number().over(
-          Window.partitionBy("event_type").orderBy("d")).cast("long"))
-    }
+  import DailyGrid.wp
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
@@ -43,7 +25,8 @@ object StatsR8f {
     // tie-corrected normal z is one double expression. Rank windows
     // run on the bounded day grid only.
     "q_wilcoxon_signrank" -> ((s, d) => {
-      val diffs = dtot(s, d, "click", "a").join(dtot(s, d, "view", "b"), "d")
+      val diffs = DailyGrid.centiOf(s, d, "click", "a")
+        .join(DailyGrid.centiOf(s, d, "view", "b"), "d")
         .filter(col("a") =!= col("b"))
         .select((col("a") - col("b")).as("dd"),
           abs(col("a") - col("b")).as("ad"))
@@ -71,7 +54,7 @@ object StatsR8f {
     // ≤50-day grid — documented bound); ρ_k snaps to 1e9 after the
     // lag join, Q is one double fold over the 7-row-per-type grid.
     "q_ljung_box" -> ((s, d) => {
-      val idx = dailyIdx(s, d)
+      val idx = DailyGrid.centi(s, d)
       val m = idx.groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("x").as("sx"))
       val u = idx.join(m, "event_type")
@@ -105,7 +88,7 @@ object StatsR8f {
     // snap back to the exact centi grid, DW is exact sums after the
     // snap. One lag window on the day grid.
     "q_durbin_watson" -> ((s, d) => {
-      val idx = dailyIdx(s, d).withColumnRenamed("x", "y")
+      val idx = DailyGrid.centi(s, d).withColumnRenamed("x", "y")
         .withColumnRenamed("i", "t")
       val m = idx.groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("t").as("st"), sum("y").as("sy"),
@@ -121,8 +104,8 @@ object StatsR8f {
           round(col("y") - col("slope") * col("t")
             - (col("sy") - col("slope") * col("st")) / col("n"))
             .cast("long").as("e_u"))
-      val wo = Window.partitionBy("event_type").orderBy("t")
-      e.withColumn("pe", lag("e_u", 1).over(wo))
+      e.withColumn("pe", lag("e_u", 1).over(
+          Window.partitionBy("event_type").orderBy("t")))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           round(sum(when(col("pe").isNull, 0.0)
@@ -137,18 +120,10 @@ object StatsR8f {
     // type — pairs of DAYS, never of events), middle-two average on
     // exact longs, one division at the end.
     "q_hodges_lehmann" -> ((s, d) => {
-      val idx = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(sum(floor(col("value") * 1e3).cast("long")).as("s_m"),
-          count(lit(1)).as("cnt"))
-        .withColumn("y", expr("s_m div cnt"))
-        .withColumn("i", row_number().over(
-          Window.partitionBy("event_type").orderBy("d")).cast("long"))
+      val idx = DailyGrid.mean(s, d)
         .select(col("event_type"), col("y"), col("i"))
-        .localCheckpoint(eager = true) // bounded day grid, 2 legs
       val b = idx.select(col("event_type").as("et2"), col("y").as("y2"),
         col("i").as("i2"))
-      val wp = Window.partitionBy("event_type")
       idx.join(b, col("et2") === col("event_type")
           && col("i") <= col("i2"))
         .select(col("event_type"), (col("y") + col("y2")).as("w"))

@@ -3,11 +3,10 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.tables.Tables
 
 /** Round-9 wave 1 (SURVEY.md §2 B.10b): the second technical-analysis
   * / portfolio-diagnostics family over the shared daily-OHLC grid
-  * (StatsR8e.dailyOhlc — one partial agg over the corpus, |types|·
+  * (DailyGrid.ohlc — one partial agg over the corpus, |types|·
   * |days| rows out): Williams %R, Donchian channel breakouts, MACD
   * (SMA-signal variant — relational, the Cutler-RSI precedent), CMF,
   * MFI, Sortino, ulcer index, Calmar, market beta, Keltner channels.
@@ -20,32 +19,7 @@ import graft.tables.Tables
   */
 object StatsR9 {
 
-  import StatsR8e.{dailyOhlc, dailyCte}
-
-  private def wo = Window.partitionBy("event_type").orderBy("d")
-
-  /** Day-indexed daily milli means per type (the hodges/ses grain).
-    * Session-memoized (r13 opt): 83 call sites re-ran this events scan
-    * + partial agg per key; the |types|·|days| result materializes
-    * once (SessionMemo — exact longs, byte-identical either way). */
-  private[graft] def dailyMean(s: SparkSession, d: String): DataFrame =
-    graft.util.SessionMemo.of(s, s"dailyMean:$d") {
-      Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(sum(floor(col("value") * 1e3).cast("long")).as("s_m"),
-          count(lit(1)).as("cnt"))
-        .withColumn("y", expr("s_m div cnt"))
-    }
-
-  /** µ-snapped daily log returns of the milli-mean series per type
-    * (the q_volatility grain): r_u = round(ln(y_i/y_{i-1})·1e6). */
-  private[queries] def dailyRet(s: SparkSession, d: String): DataFrame =
-    dailyMean(s, d)
-      .withColumn("py", lag("y", 1).over(wo))
-      .filter(col("py").isNotNull)
-      .select(col("event_type"), col("d"),
-        round(log(col("y").cast("double") / col("py")) * 1e6)
-          .cast("long").as("r_u"))
+  import DailyGrid.{dailyCte, retCte, wo}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
@@ -55,7 +29,7 @@ object StatsR9 {
     // the reflection: %R = %K − 100). Full windows, flat-range guard.
     "q_williams_r" -> ((s, d) => {
       val w14 = wo.rowsBetween(-13, 0)
-      dailyOhlc(s, d)
+      DailyGrid.ohlc(s, d)
         .withColumn("n14", count(lit(1)).over(w14))
         .withColumn("h14", max("h").over(w14))
         .withColumn("l14", min("l").over(w14))
@@ -79,7 +53,7 @@ object StatsR9 {
     "q_donchian" -> ((s, d) => {
       val cur = wo.rowsBetween(-13, 0)
       val prev = wo.rowsBetween(-14, -1)
-      dailyOhlc(s, d)
+      DailyGrid.ohlc(s, d)
         .withColumn("n_cur", count(lit(1)).over(cur))
         .withColumn("u14", max("h").over(cur))
         .withColumn("d14", min("l").over(cur))
@@ -104,8 +78,7 @@ object StatsR9 {
     // snap to the 1e-6-dollar grid (centi·1e4) before the distributed
     // sum; the SMA signal then averages exact macd_u longs.
     "q_macd" -> ((s, d) => {
-      val idx = dailyOhlc(s, d)
-        .withColumn("i", row_number().over(wo).cast("long"))
+      val idx = DailyGrid.ohlc(s, d)
         .select(col("event_type"), col("d"), col("i"), col("c"))
         .localCheckpoint(eager = true) // bounded day grid, 2 legs
       val b = idx.select(col("event_type").as("et2"), col("i").as("j"),
@@ -141,7 +114,7 @@ object StatsR9 {
     // to a long before the window sum; CMF is one division per row.
     "q_cmf" -> ((s, d) => {
       val w7 = wo.rowsBetween(-6, 0)
-      dailyOhlc(s, d)
+      DailyGrid.ohlc(s, d)
         .withColumn("mfv_u", when(col("h") > col("l"),
           round(((col("c") * 2 - col("h") - col("l")) * 1000000L
             * col("vol")).cast("double") / (col("h") - col("l")))
@@ -162,7 +135,7 @@ object StatsR9 {
     // stated, and identical in the oracle.
     "q_mfi" -> ((s, d) => {
       val w14 = wo.rowsBetween(-13, 0)
-      dailyOhlc(s, d)
+      DailyGrid.ohlc(s, d)
         .withColumn("tp3", col("h") + col("l") + col("c"))
         .withColumn("ptp3", lag("tp3", 1).over(wo))
         .withColumn("mf", col("tp3") * col("vol"))
@@ -185,7 +158,7 @@ object StatsR9 {
     // exact longs (1e12·days, far inside range), one sqrt + one
     // division at the end. q_volatility's semideviation sibling.
     "q_sortino" -> ((s, d) =>
-      dailyRet(s, d)
+      DailyGrid.ret(s, d)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_ret"), sum("r_u").as("sr"),
           sum(when(col("r_u") < 0, col("r_u") * col("r_u"))
@@ -204,7 +177,7 @@ object StatsR9 {
     // close — drawdowns snap to the percent·1e6 grid (≤1e8), squares
     // sum as exact longs (≤1e16·days), one sqrt at the end.
     "q_ulcer_index" -> ((s, d) =>
-      dailyOhlc(s, d)
+      DailyGrid.ohlc(s, d)
         .withColumn("peak", max("c").over(
           wo.rowsBetween(Window.unboundedPreceding, 0)))
         .withColumn("dd_u", round((col("peak") - col("c")) * 1e8
@@ -220,10 +193,10 @@ object StatsR9 {
     // drawdown fraction — the two exact derivations above joined on
     // the bounded type grid; one division per type row.
     "q_calmar" -> ((s, d) => {
-      val ret = dailyRet(s, d)
+      val ret = DailyGrid.ret(s, d)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_ret"), sum("r_u").as("sr"))
-      val dd = dailyOhlc(s, d)
+      val dd = DailyGrid.ohlc(s, d)
         .withColumn("peak", max("c").over(
           wo.rowsBetween(Window.unboundedPreceding, 0)))
         .withColumn("dd_u", round((col("peak") - col("c")) * 1e8
@@ -246,18 +219,7 @@ object StatsR9 {
     // long moments (n·Σ ≈ 30·30·1e12 — far inside range), three
     // double expressions per type row.
     "q_beta_market" -> ((s, d) => {
-      val mkt = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(sum(floor(col("value") * 1e3).cast("long")).as("s_m"),
-          count(lit(1)).as("cnt"))
-        .withColumn("my", expr("s_m div cnt"))
-        // bounded grain: one row per day
-        .withColumn("pmy", lag("my", 1).over(Window.orderBy("d")))
-        .filter(col("pmy").isNotNull)
-        .select(col("d"),
-          round(log(col("my").cast("double") / col("pmy")) * 1e6)
-            .cast("long").as("rm_u"))
-      dailyRet(s, d).join(broadcast(mkt), "d")
+      DailyGrid.ret(s, d).join(broadcast(DailyGrid.marketRet(s, d)), "d")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("r_u").as("sr"),
           sum("rm_u").as("sm"),
@@ -286,7 +248,7 @@ object StatsR9 {
     // expression in the oracle (the bollinger breakout convention).
     "q_keltner" -> ((s, d) => {
       val w7 = wo.rowsBetween(-6, 0)
-      dailyOhlc(s, d)
+      DailyGrid.ohlc(s, d)
         .withColumn("pc", lag("c", 1).over(wo))
         .withColumn("tr", greatest(col("h") - col("l"),
           abs(col("h") - col("pc")), abs(col("l") - col("pc"))))
@@ -306,21 +268,6 @@ object StatsR9 {
         .orderBy("event_type", "d")
     })
   )
-
-  /** Shared daily milli-mean + µ-snapped-return CTEs (oracle side). */
-  private[queries] val retCte: String =
-    """dm AS (
-      |  SELECT event_type, CAST(ts AS DATE) AS d,
-      |    CAST(SUM(CAST(FLOOR(value * 1000) AS BIGINT)) // COUNT(*)
-      |      AS BIGINT) AS y
-      |  FROM events GROUP BY 1, 2),
-      |ret AS (
-      |  SELECT event_type, d,
-      |    CAST(ROUND(ln(CAST(y AS DOUBLE) / py) * 1e6) AS BIGINT) AS r_u
-      |  FROM (SELECT event_type, d, y,
-      |          lag(y) OVER (PARTITION BY event_type ORDER BY d) AS py
-      |        FROM dm)
-      |  WHERE py IS NOT NULL)""".stripMargin
 
   val oracle: Map[String, String] = Map(
     // identical percent·1e6 snap (%R = −(h14−c)/(h14−l14)·100)
@@ -500,17 +447,7 @@ object StatsR9 {
     // identical µ-snapped legs and exact long regression moments
     "q_beta_market" ->
       s"""WITH $retCte,
-        |mm AS (
-        |  SELECT CAST(ts AS DATE) AS d,
-        |    CAST(SUM(CAST(FLOOR(value * 1000) AS BIGINT)) // COUNT(*)
-        |      AS BIGINT) AS my
-        |  FROM events GROUP BY 1),
-        |mret AS (
-        |  SELECT d,
-        |    CAST(ROUND(ln(CAST(my AS DOUBLE) / pmy) * 1e6) AS BIGINT)
-        |      AS rm_u
-        |  FROM (SELECT d, my, lag(my) OVER (ORDER BY d) AS pmy FROM mm)
-        |  WHERE pmy IS NOT NULL),
+        |${DailyGrid.mktCte},
         |g AS (
         |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
         |    CAST(SUM(r_u) AS BIGINT) AS sr,

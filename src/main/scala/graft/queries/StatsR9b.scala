@@ -17,21 +17,11 @@ import graft.tables.Tables
   */
 object StatsR9b {
 
-  private def wo = Window.partitionBy("event_type").orderBy("d")
-
-  /** Day-indexed daily milli means per type (the hodges/ses grain):
-    * y = exact milli mean, t = 1-based day index. */
-  // rides the session-memoized dailyMean grid (r13 opt) — the events
-  // scan + agg no longer re-runs per consumer; the index window runs
-  // over the bounded day grid
-  private def dailyIdx(s: SparkSession, d: String): DataFrame =
-    StatsR9.dailyMean(s, d)
-      .withColumn("t", row_number().over(wo).cast("long"))
-      .select(col("event_type"), col("d"), col("y"), col("t"))
+  import DailyGrid.{wo, wp}
 
   /** Exact OLS trend moments per type over the daily grid. */
   private def trendFit(s: SparkSession, d: String): DataFrame =
-    dailyIdx(s, d).groupBy("event_type")
+    DailyGrid.mean(s, d).withColumnRenamed("i", "t").groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("t").as("st"), sum("y").as("sy"),
         sum(col("t") * col("y")).as("sty"),
         sum(col("t") * col("t")).as("stt"))
@@ -50,7 +40,7 @@ object StatsR9b {
     // moments, residuals snapped to milli longs (the durbin_watson
     // convention), D_t = e²h/(2s²(1−h)²), influential if D > 4/n.
     "q_cooks_distance" -> ((s, d) => {
-      val e = dailyIdx(s, d)
+      val e = DailyGrid.mean(s, d).withColumnRenamed("i", "t")
         .join(trendFit(s, d), "event_type")
         .withColumn("e_u", round(col("y") - col("slope") * col("t")
           - col("icept")).cast("long"))
@@ -79,7 +69,7 @@ object StatsR9b {
     // unrestricted (y~y₁+x₁) OLS both in closed form from ONE set of
     // exact long moments on the joined day grid; F with (1, n−3) df.
     "q_granger_lite" -> ((s, d) => {
-      val g = dailyIdx(s, d)
+      val g = DailyGrid.mean(s, d)
         .filter(col("event_type").isin("click", "view"))
         .groupBy("d")
         .agg(max(when(col("event_type") === "view", col("y"))).as("yv"),
@@ -135,7 +125,7 @@ object StatsR9b {
     // centering (u = n·x − Σx, the ljung_box trick), ρ_k snapped to
     // 1e9 after the lag join — negative lags mean click leads.
     "q_ccf" -> ((s, d) => {
-      val g = dailyIdx(s, d)
+      val g = DailyGrid.mean(s, d)
         .filter(col("event_type").isin("click", "view"))
         .groupBy("d")
         .agg(max(when(col("event_type") === "click", col("y"))).as("x"),
@@ -171,7 +161,7 @@ object StatsR9b {
     // (ties break neither way — stated) counted on the daily-mean
     // grid; E[T] = 2(n−2)/3, Var = (16n−29)/90, one z per type.
     "q_turning_points" -> ((s, d) =>
-      dailyIdx(s, d)
+      DailyGrid.mean(s, d)
         .withColumn("py", lag("y", 1).over(wo))
         .withColumn("ny", lead("y", 1).over(wo))
         .filter(col("py").isNotNull && col("ny").isNotNull)
@@ -191,15 +181,14 @@ object StatsR9b {
     // Σ(Δr2)²/Σ(r2−(n+1))² is a ratio of exact longs. z uses the
     // exact Bartels variance, one double expression.
     "q_bartels_rank" -> ((s, d) => {
-      val r = dailyIdx(s, d)
+      val r = DailyGrid.mean(s, d)
         .withColumn("mr", rank().over(
           Window.partitionBy("event_type").orderBy("y")).cast("long"))
         .withColumn("tc", count(lit(1)).over(
           Window.partitionBy("event_type", "y")))
         .withColumn("r2", col("mr") * 2 + col("tc") - 1)
       r.withColumn("pr2", lag("r2", 1).over(wo))
-        .withColumn("nn", count(lit(1)).over(
-          Window.partitionBy("event_type")))
+        .withColumn("nn", count(lit(1)).over(wp))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           sum(when(col("pr2").isNotNull,
@@ -286,7 +275,7 @@ object StatsR9b {
     // dependent variable, and Σe⁴ on the deci grid stays ≤ ~5e14·days
     // (milli residuals overflowed long Σe⁴ on sparse day grids).
     "q_white_test" -> ((s, d) => {
-      val e = dailyIdx(s, d)
+      val e = DailyGrid.mean(s, d).withColumnRenamed("i", "t")
         .join(trendFit(s, d).select(col("event_type"), col("slope"),
           col("icept")), "event_type")
         .withColumn("e_u", round((col("y") - col("slope") * col("t")
@@ -333,7 +322,7 @@ object StatsR9b {
     // weighted sums B1 = Σ(i−1)y, B2 = Σ(i−1)(i−2)y, B3; λ-moments
     // and ratios assemble as double rationals at the end.
     "q_l_moments" -> ((s, d) =>
-      dailyIdx(s, d)
+      DailyGrid.mean(s, d)
         .withColumn("i", row_number().over(
           Window.partitionBy("event_type").orderBy("y", "d")).cast("long"))
         .groupBy("event_type")
@@ -365,9 +354,7 @@ object StatsR9b {
     // type, method of moments: β = s·√6/π, μ = mean − γβ (γ and π as
     // shared literals), plus the 10-day return level μ − β·ln(−ln(0.9)).
     "q_gumbel_fit" -> ((s, d) =>
-      Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(max(round(col("value") * 100).cast("long")).as("mx"))
+      DailyGrid.ohlc(s, d).select(col("event_type"), col("h").as("mx"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("mx").as("sm"),
           sum(col("mx") * col("mx")).as("sq"))

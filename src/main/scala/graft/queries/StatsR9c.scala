@@ -15,15 +15,7 @@ import graft.tables.Tables
   */
 object StatsR9c {
 
-  private def wo = Window.partitionBy("event_type").orderBy("d")
-
-  /** Day-indexed daily milli means per type. */
-  // rides the session-memoized dailyMean grid (r13 opt) — the events
-  // scan + agg no longer re-runs per consumer
-  private def dailyIdx(s: SparkSession, d: String): DataFrame =
-    StatsR9.dailyMean(s, d)
-      .withColumn("i", row_number().over(wo).cast("long"))
-      .select(col("event_type"), col("d"), col("y"), col("i"))
+  import DailyGrid.wo
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
@@ -35,7 +27,7 @@ object StatsR9c {
     // alphabet histogram. Breakpoint comparisons are doubles built
     // from exact longs with one shared expression.
     "q_sax_symbols" -> ((s, d) => {
-      val idx = dailyIdx(s, d)
+      val idx = DailyGrid.mean(s, d)
       val m = idx.groupBy(col("event_type").as("et2"))
         .agg(count(lit(1)).as("n"), sum("y").as("sy"),
           sum(col("y") * col("y")).as("sq"))
@@ -65,7 +57,7 @@ object StatsR9c {
     // (d_u, j)-min struct — deterministic tiebreak.
     "q_matrix_profile" -> ((s, d) => {
       val m = 7
-      val idx = dailyIdx(s, d).localCheckpoint(eager = true)
+      val idx = DailyGrid.mean(s, d)
       val offs = s.range(0, m).select(col("id").as("o"))
       val win = idx.crossJoin(broadcast(offs))
         .withColumn("wi", col("i") - col("o"))
@@ -119,7 +111,7 @@ object StatsR9c {
     // engines agree on exactly), paired per decile.
     "q_qq_deciles" -> ((s, d) => {
       def decs(t: String, alias: String) = {
-        val r = dailyIdx(s, d).filter(col("event_type") === t)
+        val r = DailyGrid.mean(s, d).filter(col("event_type") === t)
           .withColumn("rk", row_number().over(
             Window.orderBy(col("y"), col("d"))).cast("long"))
           .withColumn("n", count(lit(1)).over(Window.partitionBy()))
@@ -139,7 +131,7 @@ object StatsR9c {
     // Fisher g1 as one double expression per emitted day.
     "q_rolling_skew" -> ((s, d) => {
       val w14 = wo.rowsBetween(-13, 0)
-      dailyIdx(s, d)
+      DailyGrid.mean(s, d)
         .withColumn("n14", count(lit(1)).over(w14))
         .withColumn("s1", sum("y").over(w14))
         .withColumn("s2", sum(col("y") * col("y")).over(w14))
@@ -200,7 +192,7 @@ object StatsR9c {
     // per type: the deci-snapped trend residuals regress on (t, e₁)
     // closed form (white_test normal equations), LM = (n−1)·R².
     "q_breusch_godfrey" -> ((s, d) => {
-      val fit = dailyIdx(s, d).groupBy(col("event_type").as("etf"))
+      val fit = DailyGrid.mean(s, d).groupBy(col("event_type").as("etf"))
         .agg(count(lit(1)).as("nf"), sum("i").as("st"), sum("y").as("sy"),
           sum(col("i") * col("y")).as("sty"),
           sum(col("i") * col("i")).as("stt"))
@@ -210,7 +202,7 @@ object StatsR9c {
             - col("st").cast("double") * col("st")))
         .withColumn("icept", (col("sy") - col("slope") * col("st"))
           / col("nf"))
-      val e = dailyIdx(s, d)
+      val e = DailyGrid.mean(s, d)
         .join(fit, col("event_type") === col("etf"))
         .withColumn("e_u", round((col("y") - col("slope") * col("i")
           - col("icept")) / 100).cast("long"))

@@ -16,22 +16,12 @@ import graft.tables.Tables
   */
 object StatsR9e {
 
-  private def wo = Window.partitionBy("event_type").orderBy("d")
+  import DailyGrid.{wo, wp}
 
   /** µ-snapped daily log returns of the milli-mean series per type,
     * with a per-type return index (1-based, day order). */
   private def retIdx(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-      .agg(sum(floor(col("value") * 1e3).cast("long")).as("s_m"),
-        count(lit(1)).as("cnt"))
-      .withColumn("y", expr("s_m div cnt"))
-      .withColumn("py", lag("y", 1).over(wo))
-      .filter(col("py").isNotNull)
-      .select(col("event_type"), col("d"),
-        round(log(col("y").cast("double") / col("py")) * 1e6)
-          .cast("long").as("r_u"))
-      .withColumn("i", row_number().over(wo).cast("long"))
+    DailyGrid.ret(s, d).withColumn("i", row_number().over(wo).cast("long"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
@@ -44,8 +34,7 @@ object StatsR9e {
       val r = retIdx(s, d)
         .withColumn("rk", row_number().over(
           Window.partitionBy("event_type").orderBy("r_u", "d")).cast("long"))
-        .withColumn("n", count(lit(1)).over(
-          Window.partitionBy("event_type")))
+        .withColumn("n", count(lit(1)).over(wp))
         .withColumn("k", ceil(col("n") * 0.05).cast("long"))
       r.filter(col("rk") <= col("k"))
         .groupBy("event_type")
@@ -93,8 +82,7 @@ object StatsR9e {
     // flagged days (all exact longs); emits per-type spell counts
     // and the longest spell.
     "q_drawdown_duration" -> ((s, d) => {
-      val c = StatsR8e.dailyOhlc(s, d)
-        .withColumn("i", row_number().over(wo).cast("long"))
+      val c = DailyGrid.ohlc(s, d)
         .withColumn("peak", max("c").over(
           wo.rowsBetween(Window.unboundedPreceding, 0)))
         .filter(col("c") < col("peak"))
@@ -238,7 +226,7 @@ object StatsR9e {
 
     // identical below-peak islands (i − rank-among-flagged)
     "q_drawdown_duration" ->
-      s"""WITH ${StatsR8e.dailyCte},
+      s"""WITH ${DailyGrid.dailyCte},
         |f AS (
         |  SELECT event_type, c,
         |    CAST(row_number() OVER wp AS BIGINT) AS i,

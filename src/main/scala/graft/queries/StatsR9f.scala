@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.tables.Tables
 
 /** Round-9 wave 6 (SURVEY.md §2 B.10b): trend-age indicators, a
   * dispersion-normalized oscillator, threshold performance, scale
@@ -18,10 +17,7 @@ import graft.tables.Tables
   */
 object StatsR9f {
 
-  import StatsR8e.{dailyOhlc, dailyCte}
-  import StatsR9.{dailyMean, dailyRet, retCte}
-
-  private def wo = Window.partitionBy("event_type").orderBy("d")
+  import DailyGrid.{dailyCte, dmCte, retCte, wo, wp}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
@@ -34,8 +30,7 @@ object StatsR9f {
     // (25 − age)·4 — exact integers 0..100, no division at all.
     "q_aroon" -> ((s, d) => {
       val w25 = wo.rowsBetween(-24, 0)
-      dailyOhlc(s, d)
-        .withColumn("i", row_number().over(wo).cast("long"))
+      DailyGrid.ohlc(s, d)
         .withColumn("eh", col("h") * 1000000L + col("i"))
         .withColumn("el", col("l") * 1000000L + (lit(1000000L) - col("i")))
         .withColumn("n25", count(lit(1)).over(w25))
@@ -60,9 +55,8 @@ object StatsR9f {
     // (20·tp3 − S)·10/(3T): ONE double division per row.
     "q_cci" -> ((s, d) => {
       val wS = wo.rowsBetween(-19, 0)
-      val idx = dailyOhlc(s, d)
+      val idx = DailyGrid.ohlc(s, d)
         .withColumn("tp3", col("h") + col("l") + col("c"))
-        .withColumn("i", row_number().over(wo).cast("long"))
         .select(col("event_type"), col("d"), col("i"), col("tp3"))
         .withColumn("n20", count(lit(1)).over(wS))
         .withColumn("ss", sum("tp3").over(wS))
@@ -85,7 +79,7 @@ object StatsR9f {
     // µ-snapped daily log returns — both legs exact long sums, one
     // division at the end.
     "q_omega_ratio" -> ((s, d) => {
-      dailyRet(s, d)
+      DailyGrid.ret(s, d)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_ret"),
           sum(greatest(col("r_u"), lit(0L))).as("gains_u"),
@@ -104,7 +98,7 @@ object StatsR9f {
     // Σᵢ(n·Σy² − (Σy)²) and B = n·Σt² − (Σt)² are exact longs and
     // alpha = k·(1 − A/B)/(k−1) is one double chain on one output row.
     "q_cronbach_alpha" -> ((s, d) => {
-      val dm = dailyMean(s, d).select(col("event_type"), col("d"), col("y"))
+      val dm = DailyGrid.mean(s, d).select(col("event_type"), col("d"), col("y"))
         .localCheckpoint(eager = true) // bounded day grid, 2 legs
       val k = dm.select(countDistinct("event_type")).first().getLong(0)
       val full = dm.groupBy("d").agg(count(lit(1)).as("nt"),
@@ -133,7 +127,7 @@ object StatsR9f {
     // 2×2 counts split on 2y > med2, chi-square N(ad−bc)²/(row·col
     // products) — exact integers to the single division.
     "q_mood_median" -> ((s, d) => {
-      val dm = dailyMean(s, d).select(col("event_type"), col("d"), col("y"))
+      val dm = DailyGrid.mean(s, d).select(col("event_type"), col("d"), col("y"))
         .localCheckpoint(eager = true) // bounded day grid, 2 legs
       val pairs = dm.select(col("event_type").as("t1")).distinct()
         .join(dm.select(col("event_type").as("t2")).distinct(),
@@ -182,10 +176,8 @@ object StatsR9f {
     "q_pettitt" -> ((s, d) => {
       val wy = Window.partitionBy("event_type").orderBy("y")
       val wt = Window.partitionBy("event_type", "y")
-      val wp = Window.partitionBy("event_type")
-      val u = dailyMean(s, d)
-        .select(col("event_type"), col("d"), col("y"))
-        .withColumn("i", row_number().over(wo).cast("long"))
+      val u = DailyGrid.mean(s, d)
+        .select(col("event_type"), col("d"), col("y"), col("i"))
         .withColumn("n", count(lit(1)).over(wp))
         .withColumn("tr2",
           rank().over(wy).cast("long") * 2 + count(lit(1)).over(wt) - 1)
@@ -207,13 +199,6 @@ object StatsR9f {
         .orderBy("event_type")
     })
   )
-
-  private[queries] val dmCte: String =
-    """dm AS (
-      |  SELECT event_type, CAST(ts AS DATE) AS d,
-      |    CAST(SUM(CAST(FLOOR(value * 1000) AS BIGINT)) // COUNT(*)
-      |      AS BIGINT) AS y
-      |  FROM events GROUP BY 1, 2)""".stripMargin
 
   val oracle: Map[String, String] = Map(
     // identical h·1e6+i / l·1e6+(1e6−i) argmax encodings

@@ -19,10 +19,7 @@ import graft.tables.Tables
   */
 object StatsR9g {
 
-  import StatsR9.dailyMean
-  import StatsR9f.dmCte
-
-  private def wo = Window.partitionBy("event_type").orderBy("d")
+  import DailyGrid.{dmCte, wo, wp}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
@@ -32,9 +29,7 @@ object StatsR9g {
     // falls (ties excluded), z = (2·plus − n')/√n' — the day-grid
     // self-join matches pairs of DAYS, one row per pair.
     "q_cox_stuart" -> ((s, d) => {
-      val wp = Window.partitionBy("event_type")
-      val idx = dailyMean(s, d)
-        .withColumn("i", row_number().over(wo).cast("long"))
+      val idx = DailyGrid.mean(s, d)
         .withColumn("n", count(lit(1)).over(wp))
         .withColumn("h", expr("(n + 1) div 2"))
         .select(col("event_type"), col("i"), col("n"), col("h"), col("y"))
@@ -61,9 +56,7 @@ object StatsR9g {
     // long for every prefix t (including S_n = 0); the rescaled range
     // R/(s·√n) is ONE identical double chain from four exact sums.
     "q_buishand" -> ((s, d) => {
-      val wp = Window.partitionBy("event_type")
-      dailyMean(s, d)
-        .withColumn("i", row_number().over(wo).cast("long"))
+      DailyGrid.mean(s, d)
         .withColumn("n", count(lit(1)).over(wp))
         .withColumn("t_sum", sum("y").over(wp))
         .withColumn("p", sum("y").over(
@@ -89,7 +82,7 @@ object StatsR9g {
     // cross-group day pair, a bounded day² grid), mean and variance
     // from the exact group-size sums, z in one identical chain.
     "q_jonckheere" -> ((s, d) => {
-      val dm = dailyMean(s, d).select(col("event_type"), col("y"))
+      val dm = DailyGrid.mean(s, d).select(col("event_type"), col("y"))
         .localCheckpoint(eager = true) // bounded day grid, 3 legs
       val j2 = dm.join(dm.select(col("event_type").as("et2"),
           col("y").as("y2")), col("event_type") < col("et2"))
@@ -112,7 +105,7 @@ object StatsR9g {
     // T — the two mean squares and the ratio are ONE identical double
     // chain on the single output row.
     "q_icc" -> ((s, d) => {
-      val dm = dailyMean(s, d).select(col("event_type"), col("d"), col("y"))
+      val dm = DailyGrid.mean(s, d).select(col("event_type"), col("d"), col("y"))
         .localCheckpoint(eager = true) // bounded day grid, 2 legs
       val k = dm.select(countDistinct("event_type")).first().getLong(0)
       val full = dm.groupBy("d").agg(count(lit(1)).as("nt"),

@@ -17,11 +17,7 @@ import org.apache.spark.sql.expressions.Window
   */
 object StatsR9h {
 
-  import StatsR9.{dailyMean, dailyRet}
-  import StatsR9f.dmCte
-
-  private def wo = Window.partitionBy("event_type").orderBy("d")
-  private def wp = Window.partitionBy("event_type")
+  import DailyGrid.{dmCte, wo, wp}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
@@ -32,7 +28,7 @@ object StatsR9h {
     // the first sample; z from the classical no-ties moments (even/
     // odd N branches spelled identically as CASE in the oracle).
     "q_ansari_bradley" -> ((s, d) => {
-      val dm = dailyMean(s, d).select(col("event_type"), col("d"), col("y"))
+      val dm = DailyGrid.mean(s, d).select(col("event_type"), col("d"), col("y"))
         .localCheckpoint(eager = true) // bounded day grid, 2 legs
       val pairs = dm.select(col("event_type").as("t1")).distinct()
         .join(dm.select(col("event_type").as("t2")).distinct(),
@@ -78,7 +74,7 @@ object StatsR9h {
       // bounded grain: daily-mean rows (2 types x days) and 5 event types
       val wy = Window.orderBy("y")
       val wty = Window.partitionBy("y")
-      val base = dailyMean(s, d)
+      val base = DailyGrid.mean(s, d)
         .select(col("event_type"), col("y"))
         .withColumn("l", dense_rank().over(Window.orderBy("event_type"))
           .cast("long"))
@@ -104,8 +100,7 @@ object StatsR9h {
     // D_t²·n/(t·(n−t)·(n·Σy²−M²)) — exact longs until the ONE double
     // chain per day row; K = max T, t* the first argmax day.
     "q_snht" -> ((s, d) => {
-      val tt = dailyMean(s, d)
-        .withColumn("i", row_number().over(wo).cast("long"))
+      val tt = DailyGrid.mean(s, d)
         .withColumn("n", count(lit(1)).over(wp))
         .withColumn("m", sum("y").over(wp))
         .withColumn("ss", sum(col("y") * col("y")).over(wp))
@@ -133,7 +128,7 @@ object StatsR9h {
     // both exact, both cast to double only for the final ratio.
     "q_variance_ratio" -> ((s, d) => {
       val w5 = wo.rowsBetween(-4, 0)
-      val r = dailyRet(s, d)
+      val r = DailyGrid.ret(s, d)
         .withColumn("n", count(lit(1)).over(wp))
         .withColumn("m", sum("r_u").over(wp))
         .withColumn("s5", sum("r_u").over(w5))
@@ -160,7 +155,7 @@ object StatsR9h {
     "q_dixon_q" -> ((s, d) => {
       val wa = wo.orderBy("y", "d")
       val wd2 = wo.orderBy(col("y").desc, col("d").desc)
-      dailyMean(s, d)
+      DailyGrid.mean(s, d)
         .withColumn("ra", row_number().over(wa).cast("long"))
         .withColumn("rd", row_number().over(wd2).cast("long"))
         .groupBy("event_type")
@@ -183,7 +178,7 @@ object StatsR9h {
     // tie-break (a deterministic total order — no midranks), L =
     // Σ rank·l against the classical no-ties moments.
     "q_page_trend" -> ((s, d) => {
-      val wk = dailyMean(s, d)
+      val wk = DailyGrid.mean(s, d)
         .groupBy(col("event_type"), date_trunc("week", col("d")).as("w"))
         .agg(sum("y").as("sy"), count(lit(1)).as("cd"))
         .withColumn("wv", expr("sy div cd"))
@@ -206,8 +201,6 @@ object StatsR9h {
             4).as("z"))
     })
   )
-
-  private val retCte2: String = StatsR9.retCte
 
   val oracle: Map[String, String] = Map(
     // identical doubled midrank scores and CASE moments
@@ -315,7 +308,7 @@ object StatsR9h {
 
     // identical cleared deviations; HUGEINT sum mirrors decimal(38)
     "q_variance_ratio" ->
-      s"""WITH $retCte2,
+      s"""WITH ${DailyGrid.retCte},
         |w AS (
         |  SELECT event_type, r_u,
         |    CAST(COUNT(*) OVER wp AS BIGINT) AS n,

@@ -19,11 +19,7 @@ import graft.tables.Tables
   */
 object StatsR9i {
 
-  import StatsR9.{dailyMean, dailyRet}
-  import StatsR9f.dmCte
-
-  private def wo = Window.partitionBy("event_type").orderBy("d")
-  private def wp = Window.partitionBy("event_type")
+  import DailyGrid.{dmCte, wo}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
@@ -32,7 +28,7 @@ object StatsR9i {
     // sr·(n−1)·1e6/(n·Σr² − (Σr)²) — exact longs to the one division;
     // μ and σ emitted alongside from the same sums.
     "q_kelly_fraction" -> ((s, d) => {
-      dailyRet(s, d)
+      DailyGrid.ret(s, d)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("r_u").as("sr"),
           sum(col("r_u") * col("r_u")).as("srr"))
@@ -54,18 +50,7 @@ object StatsR9i {
     // the 1e6 grid cancels in IR = mean(a)/sd(a), tracking error
     // keeps it.
     "q_information_ratio" -> ((s, d) => {
-      val mkt = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(sum(floor(col("value") * 1e3).cast("long")).as("s_m"),
-          count(lit(1)).as("cnt"))
-        .withColumn("my", expr("s_m div cnt"))
-        // bounded grain: one row per day
-        .withColumn("pmy", lag("my", 1).over(Window.orderBy("d")))
-        .filter(col("pmy").isNotNull)
-        .select(col("d"),
-          round(log(col("my").cast("double") / col("pmy")) * 1e6)
-            .cast("long").as("rm_u"))
-      dailyRet(s, d).join(broadcast(mkt), "d")
+      DailyGrid.ret(s, d).join(broadcast(DailyGrid.marketRet(s, d)), "d")
         .withColumn("a", col("r_u") - col("rm_u"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("a").as("sa"),
@@ -150,7 +135,7 @@ object StatsR9i {
     // sequence, classical moments E = (2n−1)/3, V = (16n−29)/90 with
     // n = kept diffs + 1.
     "q_runs_updown" -> ((s, d) => {
-      val diffs = dailyMean(s, d)
+      val diffs = DailyGrid.mean(s, d)
         .withColumn("py", lag("y", 1).over(wo))
         .filter(col("py").isNotNull && col("y") =!= col("py"))
         .withColumn("sgn", when(col("y") > col("py"), 1L).otherwise(0L))
@@ -204,8 +189,6 @@ object StatsR9i {
     })
   )
 
-  private val retCte2: String = StatsR9.retCte
-
   /** τ=0.8 token-Jaccard edge CTE block (the q_label_prop graph). */
   private val edgeCte: String =
     """tok2 AS (
@@ -228,7 +211,7 @@ object StatsR9i {
   val oracle: Map[String, String] = Map(
     // identical cleared sums and divisions
     "q_kelly_fraction" ->
-      s"""WITH $retCte2,
+      s"""WITH ${DailyGrid.retCte},
         |ag AS (
         |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
         |    CAST(SUM(r_u) AS BIGINT) AS sr,
@@ -246,7 +229,7 @@ object StatsR9i {
 
     // identical market leg (q_beta_market's) and cleared active sums
     "q_information_ratio" ->
-      s"""WITH $retCte2,
+      s"""WITH ${DailyGrid.retCte},
         |mk AS (
         |  SELECT d,
         |    CAST(ROUND(ln(CAST(my AS DOUBLE) / pmy) * 1e6) AS BIGINT)

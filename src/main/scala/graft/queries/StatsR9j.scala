@@ -19,10 +19,7 @@ import graft.tables.Tables
   */
 object StatsR9j {
 
-  import StatsR9.{dailyMean, dailyRet}
-  import StatsR9f.dmCte
-
-  private def wo = Window.partitionBy("event_type").orderBy("d")
+  import DailyGrid.{dmCte, wo}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
@@ -34,7 +31,7 @@ object StatsR9j {
     // ranges (ties by week, stated); F = (b−1)ΣT_j²/(b·ΣS2² − ΣT_j²)
     // — every sum an exact long, ONE division.
     "q_quade" -> ((s, d) => {
-      val wk = dailyMean(s, d)
+      val wk = DailyGrid.mean(s, d)
         .groupBy(col("event_type"), date_trunc("week", col("d")).as("w"))
         .agg(sum("y").as("sy"), count(lit(1)).as("cd"))
         .withColumn("wv", expr("sy div cd"))
@@ -68,7 +65,7 @@ object StatsR9j {
     // sum would be order-dependent), pooled term and correction C
     // assembled in one identical chain.
     "q_bartlett" -> ((s, d) => {
-      val g = dailyMean(s, d)
+      val g = DailyGrid.mean(s, d)
         .groupBy("event_type")
         .agg(count(lit(1)).as("nk"), sum("y").as("sy"),
           sum(col("y") * col("y")).as("syy"))
@@ -141,7 +138,7 @@ object StatsR9j {
     // bounded within-season day pairs, summed exactly across seasons,
     // then the q_mann_kendall continuity-corrected z.
     "q_seasonal_mk" -> ((s, d) => {
-      val dm = dailyMean(s, d)
+      val dm = DailyGrid.mean(s, d)
         .withColumn("dow", dayofweek(col("d")))
         .select(col("event_type"), col("dow"), col("d"), col("y"))
         .localCheckpoint(eager = true) // bounded day grid, 2 legs
@@ -181,7 +178,7 @@ object StatsR9j {
     // difference volatility the plain sd misses) + the share of big
     // moves (|Δ| > 100 milli, stated).
     "q_rmssd" -> ((s, d) => {
-      dailyMean(s, d)
+      DailyGrid.mean(s, d)
         .withColumn("py", lag("y", 1).over(wo))
         .filter(col("py").isNotNull)
         .withColumn("dd", col("y") - col("py"))
@@ -201,7 +198,7 @@ object StatsR9j {
     // weekday µ-returns — means and cleared variances from exact
     // sums, the grid cancels inside the t, ONE identical chain.
     "q_weekend_effect" -> ((s, d) => {
-      val r = dailyRet(s, d)
+      val r = DailyGrid.ret(s, d)
         .withColumn("we", dayofweek(col("d")).isin(1, 7))
       r.groupBy("event_type")
         .agg(sum(when(col("we"), 1L).otherwise(0L)).as("n1"),
@@ -404,7 +401,7 @@ object StatsR9j {
 
     // identical cleared Welch chain
     "q_weekend_effect" ->
-      s"""WITH ${StatsR9.retCte},
+      s"""WITH ${DailyGrid.retCte},
         |fl AS (
         |  SELECT event_type, r_u,
         |    dayofweek(d) IN (0, 6) AS we

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.tables.Tables
 
 /** Round-9 wave 11, batch half (SURVEY.md §2 B.10b): benchmark
   * capture ratios and two exact-rank goodness-of-fit tests — up/down
@@ -17,8 +16,7 @@ import graft.tables.Tables
   */
 object StatsR9k {
 
-  import StatsR9.{dailyMean, dailyRet}
-  import StatsR9f.dmCte
+  import DailyGrid.dmCte
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
@@ -28,17 +26,7 @@ object StatsR9k {
     // down; the ratio of the two closes the row. Exact long sums,
     // three divisions on bounded rows.
     "q_updown_capture" -> ((s, d) => {
-      val mkt = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(sum(floor(col("value") * 1e3).cast("long")).as("s_m"),
-          count(lit(1)).as("cnt"))
-        .withColumn("my", expr("s_m div cnt"))
-        .withColumn("pmy", lag("my", 1).over(Window.orderBy("d")))
-        .filter(col("pmy").isNotNull)
-        .select(col("d"),
-          round(log(col("my").cast("double") / col("pmy")) * 1e6)
-            .cast("long").as("rm_u"))
-      dailyRet(s, d).join(broadcast(mkt), "d")
+      DailyGrid.ret(s, d).join(broadcast(DailyGrid.marketRet(s, d)), "d")
         .groupBy("event_type")
         .agg(sum(when(col("rm_u") > 0, 1L).otherwise(0L)).as("n_up"),
           sum(when(col("rm_u") > 0, col("r_u")).otherwise(0L)).as("su"),
@@ -63,7 +51,7 @@ object StatsR9k {
     // DISTINCT integers, so U = n·Σ(r−i)² + m·Σ(s−j)² is exact and
     // T = U/(nmN) − (4mn−1)/(6N) is one identical chain.
     "q_cvm_test" -> ((s, d) => {
-      val dm = dailyMean(s, d).select(col("event_type"), col("d"), col("y"))
+      val dm = DailyGrid.mean(s, d).select(col("event_type"), col("d"), col("y"))
         .localCheckpoint(eager = true) // bounded day grid, 2 legs
       val pairs = dm.select(col("event_type").as("t1")).distinct()
         .join(dm.select(col("event_type").as("t2")).distinct(),
@@ -103,7 +91,7 @@ object StatsR9k {
     // (k·days), per-position terms (N·M_gi − i·n_g)²/(i(N−i)) snap to
     // 1e6, per-group sums snap once more before the exact final sum.
     "q_ad_ksample" -> ((s, d) => {
-      val dm = dailyMean(s, d)
+      val dm = DailyGrid.mean(s, d)
         .select(col("event_type"), col("d"), col("y"))
         .withColumn("i", row_number().over(
           Window.orderBy("y", "event_type", "d")).cast("long"))
@@ -138,7 +126,7 @@ object StatsR9k {
   val oracle: Map[String, String] = Map(
     // identical market leg and sum-ratio captures
     "q_updown_capture" ->
-      s"""WITH ${StatsR9.retCte},
+      s"""WITH ${DailyGrid.retCte},
         |mk AS (
         |  SELECT d,
         |    CAST(ROUND(ln(CAST(my AS DOUBLE) / pmy) * 1e6) AS BIGINT)

@@ -19,7 +19,7 @@ import graft.tables.Tables
   */
 object StatsR9l {
 
-  import StatsR9.dailyRet
+  import DailyGrid.wp
 
   /** the 95% normal quantile (stated) — shared by the Spark chain and
     * the oracle so both sides fold the identical double constants */
@@ -93,7 +93,7 @@ object StatsR9l {
       val vol = Tables.events(s, d)
         .groupBy(col("event_type"), to_date(col("ts")).as("d"))
         .agg(count(lit(1)).as("vol"))
-      dailyRet(s, d).join(vol, Seq("event_type", "d"))
+      DailyGrid.ret(s, d).join(vol, Seq("event_type", "d"))
         .select(col("event_type"),
           round(abs(col("r_u")) * lit(1e6) / col("vol")).cast("long")
             .as("term_u"))
@@ -112,7 +112,7 @@ object StatsR9l {
     // z = −1.6448536269514722 (the 95% normal quantile, stated).
     "q_cornish_fisher" -> ((s, d) => {
       val z = zq
-      val r = dailyRet(s, d)
+      val r = DailyGrid.ret(s, d)
         .withColumn("r2", col("r_u") * col("r_u"))
       r.groupBy("event_type")
         .agg(count(lit(1)).as("n"),
@@ -162,8 +162,7 @@ object StatsR9l {
       val w = Window.partitionBy("event_type")
         .orderBy(col("us"), col("event_id"))
       ev.withColumn("i", row_number().over(w).cast("long"))
-        .withColumn("n", count(lit(1)).over(
-          Window.partitionBy("event_type")))
+        .withColumn("n", count(lit(1)).over(wp))
         .groupBy("event_type")
         .agg(max("n").as("n"),
           max(col("i") * dayUs - col("n") * col("us")).as("dp_c"),
@@ -322,7 +321,7 @@ object StatsR9l {
 
     // identical snapped per-day terms
     "q_amihud" ->
-      s"""WITH ${StatsR9.retCte},
+      s"""WITH ${DailyGrid.retCte},
         |vol AS (
         |  SELECT event_type, CAST(ts AS DATE) AS d,
         |    CAST(COUNT(*) AS BIGINT) AS vol
@@ -340,7 +339,7 @@ object StatsR9l {
 
     // identical HUGEINT moment sums and one chain
     "q_cornish_fisher" ->
-      s"""WITH ${StatsR9.retCte},
+      s"""WITH ${DailyGrid.retCte},
         |ag AS (
         |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
         |    SUM(r_u) AS s1, SUM(r_u * r_u) AS s2,

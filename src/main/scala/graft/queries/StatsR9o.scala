@@ -19,7 +19,7 @@ import graft.tables.Tables
   */
 object StatsR9o {
 
-  import StatsR9.dailyRet
+  import DailyGrid.wp
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
@@ -135,10 +135,9 @@ object StatsR9o {
     // stays a long; ONE division per emitted cell.
     "q_percentile_interp" -> ((s, d) => {
       val wr = Window.partitionBy("event_type").orderBy("y", "d")
-      val ranked = StatsR9.dailyMean(s, d)
+      val ranked = DailyGrid.mean(s, d)
         .withColumn("rn", row_number().over(wr).cast("long"))
-        .withColumn("n", count(lit(1)).over(
-          Window.partitionBy("event_type")))
+        .withColumn("n", count(lit(1)).over(wp))
       def interp(q4: Int): org.apache.spark.sql.Column = {
         val pos4 = (col("n") - 1) * q4
         val lo = expr(s"((n - 1) * $q4) div 4") + 1
@@ -160,10 +159,9 @@ object StatsR9o {
     // order statistics (no interpolation, stated), one division.
     "q_tail_ratio" -> ((s, d) => {
       val wr = Window.partitionBy("event_type").orderBy("r_u", "d")
-      dailyRet(s, d)
+      DailyGrid.ret(s, d)
         .withColumn("rn", row_number().over(wr).cast("long"))
-        .withColumn("n", count(lit(1)).over(
-          Window.partitionBy("event_type")))
+        .withColumn("n", count(lit(1)).over(wp))
         .groupBy("event_type")
         .agg(max("n").as("n_ret"),
           max(when(col("rn") === ceil(col("n") * 0.95).cast("long"),
@@ -293,7 +291,7 @@ object StatsR9o {
 
     // identical ×4-cleared interpolation
     "q_percentile_interp" ->
-      s"""WITH ${StatsR9f.dmCte},
+      s"""WITH ${DailyGrid.dmCte},
         |rk AS (
         |  SELECT event_type, y,
         |    CAST(row_number() OVER (PARTITION BY event_type
@@ -324,7 +322,7 @@ object StatsR9o {
 
     // identical ceil-rank order statistics
     "q_tail_ratio" ->
-      s"""WITH ${StatsR9.retCte},
+      s"""WITH ${DailyGrid.retCte},
         |rk AS (
         |  SELECT event_type, r_u,
         |    CAST(row_number() OVER (PARTITION BY event_type

@@ -18,8 +18,7 @@ import graft.tables.Tables
   */
 object StatsR9p {
 
-  import StatsR9.{dailyMean, dailyRet}
-  import StatsR9f.dmCte
+  import DailyGrid.{dmCte, wo, wp}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
@@ -63,20 +62,8 @@ object StatsR9p {
     // in-window sums (14·Σxy − ΣxΣy)/(14·Σyy − (Σy)²) — exact longs
     // to ONE division per day row, full windows only.
     "q_rolling_beta" -> ((s, d) => {
-      val mkt = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(sum(floor(col("value") * 1e3).cast("long")).as("s_m"),
-          count(lit(1)).as("cnt"))
-        .withColumn("my", expr("s_m div cnt"))
-        // bounded grain: one row per day
-        .withColumn("pmy", lag("my", 1).over(Window.orderBy("d")))
-        .filter(col("pmy").isNotNull)
-        .select(col("d"),
-          round(log(col("my").cast("double") / col("pmy")) * 1e6)
-            .cast("long").as("rm_u"))
-      val w14 = Window.partitionBy("event_type").orderBy("d")
-        .rowsBetween(-13, 0)
-      dailyRet(s, d).join(broadcast(mkt), "d")
+      val w14 = wo.rowsBetween(-13, 0)
+      DailyGrid.ret(s, d).join(broadcast(DailyGrid.marketRet(s, d)), "d")
         .withColumn("n14", count(lit(1)).over(w14))
         .withColumn("sxy", sum(col("r_u") * col("rm_u")).over(w14))
         .withColumn("sx", sum("r_u").over(w14))
@@ -145,10 +132,9 @@ object StatsR9p {
     // compare at y·8. Exact integers end to end.
     "q_iqr_fences" -> ((s, d) => {
       val wr = Window.partitionBy("event_type").orderBy("y", "d")
-      val ranked = dailyMean(s, d)
+      val ranked = DailyGrid.mean(s, d)
         .withColumn("rn", row_number().over(wr).cast("long"))
-        .withColumn("n", count(lit(1)).over(
-          Window.partitionBy("event_type")))
+        .withColumn("n", count(lit(1)).over(wp))
         .localCheckpoint(eager = true) // quartiles + outlier legs
       def interp(q4: Int) =
         (sum(when(col("rn") === expr(s"((n - 1) * $q4) div 4") + 1,
@@ -214,7 +200,7 @@ object StatsR9p {
 
     // identical market leg and cleared window sums
     "q_rolling_beta" ->
-      s"""WITH ${StatsR9.retCte},
+      s"""WITH ${DailyGrid.retCte},
         |mk AS (
         |  SELECT d,
         |    CAST(ROUND(ln(CAST(my AS DOUBLE) / pmy) * 1e6) AS BIGINT)

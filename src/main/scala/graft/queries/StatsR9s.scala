@@ -17,7 +17,7 @@ import graft.tables.Tables
   */
 object StatsR9s {
 
-  import StatsR9.dailyRet
+  import DailyGrid.wo
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
@@ -134,8 +134,7 @@ object StatsR9s {
     // accumulates as decimal(38,0) (Spark) / HUGEINT (DuckDB), both
     // exact; R² and LM = (n−1)·R² close the row.
     "q_arch_lm" -> ((s, d) => {
-      val wo = Window.partitionBy("event_type").orderBy("d")
-      val sq = dailyRet(s, d)
+      val sq = DailyGrid.ret(s, d)
         .withColumn("sq", col("r_u") * col("r_u"))
         .withColumn("px", lag("sq", 1).over(wo))
         .filter(col("px").isNotNull)
@@ -297,7 +296,7 @@ object StatsR9s {
 
     // identical HUGEINT moment sums and chain
     "q_arch_lm" ->
-      s"""WITH ${StatsR9.retCte},
+      s"""WITH ${DailyGrid.retCte},
         |sq AS (
         |  SELECT event_type, sq,
         |    lag(sq) OVER (PARTITION BY event_type ORDER BY d) AS px

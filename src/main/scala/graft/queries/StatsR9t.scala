@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.tables.Tables
 
 /** Round-9 wave 20 (SURVEY.md §2 B.10b): the forecast-evaluation
   * family over the daily milli-mean grid — CRPS of the trailing-7
@@ -16,16 +15,7 @@ import graft.tables.Tables
   */
 object StatsR9t {
 
-  import StatsR9.dailyMean
-  import StatsR9f.dmCte
-
-  private def wo = Window.partitionBy("event_type").orderBy("d")
-
-  /** day-indexed milli means (the CRPS/pinball join grid). */
-  private def idx(s: SparkSession, d: String): DataFrame =
-    dailyMean(s, d)
-      .withColumn("i", row_number().over(wo).cast("long"))
-      .select(col("event_type"), col("d"), col("i"), col("y"))
+  import DailyGrid.{dmCte, wo}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
@@ -34,7 +24,7 @@ object StatsR9t {
     // 98·CRPS_t = 14·Σᵢ|xᵢ−y| − ΣᵢΣⱼ|xᵢ−xⱼ| over the 7 prior days —
     // both legs bounded day-grid joins, the mean divides once.
     "q_crps_naive" -> ((s, d) => {
-      val base = idx(s, d).localCheckpoint(eager = true) // 3 legs
+      val base = DailyGrid.mean(s, d)
       val ens = base.select(col("event_type").as("et2"),
         col("i").as("j"), col("y").as("x"))
       val t1 = base.join(ens, col("et2") === col("event_type")
@@ -66,7 +56,7 @@ object StatsR9t {
     // 7-element window makes q50 the exact 4th order statistic and
     // q90 the max; losses cleared ×2 (τ=.5) and ×10 (τ=.9).
     "q_pinball_loss" -> ((s, d) => {
-      val base = idx(s, d).localCheckpoint(eager = true)
+      val base = DailyGrid.mean(s, d)
       val ens = base.select(col("event_type").as("et2"),
         col("i").as("j"), col("y").as("x"))
       val fc = base.join(ens, col("et2") === col("event_type")
@@ -98,7 +88,7 @@ object StatsR9t {
     // (lag 7): loss differential d = |e1| − |e2| exact milli, DM =
     // Σd·√(n−1)/√(nΣd²−(Σd)²) — cleared sums, one chain.
     "q_diebold_mariano" -> ((s, d) => {
-      dailyMean(s, d)
+      DailyGrid.mean(s, d)
         .withColumn("l1", lag("y", 1).over(wo))
         .withColumn("l7", lag("y", 7).over(wo))
         .filter(col("l1").isNotNull && col("l7").isNotNull)
@@ -119,7 +109,7 @@ object StatsR9t {
     // Theil's U2: seasonal-naive (lag 7) squared error vs naive
     // (lag 1) — exact long sums, √ of one ratio.
     "q_theil_u" -> ((s, d) => {
-      dailyMean(s, d)
+      DailyGrid.mean(s, d)
         .withColumn("l1", lag("y", 1).over(wo))
         .withColumn("l7", lag("y", 7).over(wo))
         .filter(col("l1").isNotNull && col("l7").isNotNull)
@@ -140,7 +130,7 @@ object StatsR9t {
     // clearing cancels in TS = n·Σe/Σ|e| (e7 = 7y − S7 exact).
     "q_tracking_signal" -> ((s, d) => {
       val w7 = wo.rowsBetween(-7, -1)
-      dailyMean(s, d)
+      DailyGrid.mean(s, d)
         .withColumn("m7", count(lit(1)).over(w7))
         .withColumn("s7", sum("y").over(w7))
         .filter(col("m7") === 7)
@@ -159,7 +149,7 @@ object StatsR9t {
     // cleared OLS from exact milli sums — α in value units, β and R²
     // dimensionless, one chain each.
     "q_mincer_zarnowitz" -> ((s, d) => {
-      dailyMean(s, d)
+      DailyGrid.mean(s, d)
         .withColumn("f", lag("y", 1).over(wo))
         .filter(col("f").isNotNull)
         .groupBy("event_type")

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.tables.Tables
 
 /** Round-9 wave 22 (SURVEY.md §2 B.10b): distribution alignment and
   * modern two-sample distances — quantile normalization (the batch-
@@ -19,10 +18,7 @@ import graft.tables.Tables
   */
 object StatsR9v {
 
-  import StatsR9.dailyMean
-  import StatsR9f.dmCte
-
-  private def wo = Window.partitionBy("event_type").orderBy("d")
+  import DailyGrid.{dmCte, wo, wp}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
@@ -33,9 +29,9 @@ object StatsR9v {
     // long, ONE division per row; only ranks present in every type
     // (stated).
     "q_quantile_normalize" -> ((s, d) => {
-      val k = dailyMean(s, d).select(countDistinct("event_type"))
+      val k = DailyGrid.mean(s, d).select(countDistinct("event_type"))
         .first().getLong(0)
-      val ranked = dailyMean(s, d)
+      val ranked = DailyGrid.mean(s, d)
         .withColumn("r", row_number().over(
           Window.partitionBy("event_type").orderBy("y", "d"))
           .cast("long"))
@@ -54,7 +50,7 @@ object StatsR9v {
     // δ = (#(x>y) − #(x<y))/(n₁n₂) over the bounded day² pair grid —
     // exact counts, ONE division.
     "q_cliff_delta" -> ((s, d) => {
-      val dm = dailyMean(s, d).select(col("event_type"), col("y"))
+      val dm = DailyGrid.mean(s, d).select(col("event_type"), col("y"))
         .localCheckpoint(eager = true)
       dm.select(col("event_type").as("t1"), col("y").as("x"))
         .join(dm.select(col("event_type").as("t2"), col("y").as("yy")),
@@ -74,7 +70,7 @@ object StatsR9v {
     // identical chains.
     "q_process_capability" -> ((s, d) => {
       val usl = 400000L
-      dailyMean(s, d)
+      DailyGrid.mean(s, d)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("y").as("sy"),
           sum(col("y") * col("y")).as("syy"))
@@ -98,7 +94,7 @@ object StatsR9v {
     // longs before the exact sums; MMD² = Sxx/n₁² + Syy/n₂² −
     // 2Sxy/(n₁n₂) in one identical chain.
     "q_mmd_cauchy" -> ((s, d) => {
-      val dm = dailyMean(s, d).select(col("event_type"), col("y"))
+      val dm = DailyGrid.mean(s, d).select(col("event_type"), col("y"))
         .localCheckpoint(eager = true) // 3 pair legs
       def kern(a: org.apache.spark.sql.Column,
           b: org.apache.spark.sql.Column) =
@@ -133,7 +129,7 @@ object StatsR9v {
     // |x−y| − mean|x−x'| − mean|y−y'| over milli longs, three
     // bounded pair sums, one chain.
     "q_energy_distance" -> ((s, d) => {
-      val dm = dailyMean(s, d).select(col("event_type"), col("y"))
+      val dm = DailyGrid.mean(s, d).select(col("event_type"), col("y"))
         .localCheckpoint(eager = true) // 3 pair legs
       val within = dm.select(col("event_type").as("t"), col("y").as("a"))
         .join(dm.select(col("event_type").as("t"), col("y").as("b")),
@@ -165,9 +161,7 @@ object StatsR9v {
     // each side (prefix sums offset by the segment bounds — still
     // exact longs); emits up to 3 ordered changepoints per type.
     "q_binseg2" -> ((s, d) => {
-      val wp = Window.partitionBy("event_type")
-      val base = dailyMean(s, d)
-        .withColumn("i", row_number().over(wo).cast("long"))
+      val base = DailyGrid.mean(s, d)
         .withColumn("n", count(lit(1)).over(wp))
         .withColumn("p", sum("y").over(
           wo.rowsBetween(Window.unboundedPreceding, 0)))

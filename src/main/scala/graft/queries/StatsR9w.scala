@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.tables.Tables
 
 /** Round-9 wave 23 (SURVEY.md §2 B.10b): the signal-complexity
   * family over the daily grid — unnormalized Haar energy split
@@ -16,17 +15,7 @@ import graft.tables.Tables
   */
 object StatsR9w {
 
-  import StatsR9.dailyMean
-  import StatsR9f.dmCte
-
-  private def wo = Window.partitionBy("event_type").orderBy("d")
-  private def wp = Window.partitionBy("event_type")
-
-  /** day-indexed series (the pairwise-key grain). */
-  private def idx(s: SparkSession, d: String): DataFrame =
-    dailyMean(s, d)
-      .withColumn("i", row_number().over(wo).cast("long"))
-      .select(col("event_type"), col("i"), col("y"))
+  import DailyGrid.{dmCte, wo, wp}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
@@ -36,7 +25,7 @@ object StatsR9w {
     // cancels in the ENERGY SHARE, stated); detail share =
     // Σd²/(Σa²+Σd²) exact to one division.
     "q_haar_energy" -> ((s, d) => {
-      idx(s, d)
+      DailyGrid.mean(s, d)
         .withColumn("k", expr("(i + 1) div 2"))
         .groupBy("event_type", "k")
         .agg(count(lit(1)).as("m"),
@@ -60,7 +49,7 @@ object StatsR9w {
     // day-grid self-join, one division per (type, lag) row.
     "q_variogram" -> ((s, d) => {
       import s.implicits._
-      val base = idx(s, d).localCheckpoint(eager = true)
+      val base = DailyGrid.mean(s, d)
       val lags = Seq(1L, 2L, 3L, 7L).toDF("h")
       base.crossJoin(broadcast(lags))
         .join(base.select(col("event_type").as("et2"),
@@ -83,7 +72,7 @@ object StatsR9w {
     // the rank order of (y_i, y_{i+1}, y_{i+2}); per-pattern
     // −p·ln p cells snapped to 1e9 before the exact sum.
     "q_permutation_entropy" -> ((s, d) => {
-      val pat = dailyMean(s, d)
+      val pat = DailyGrid.mean(s, d)
         .withColumn("y2", lead("y", 1).over(wo))
         .withColumn("y3", lead("y", 2).over(wo))
         .filter(col("y3").isNotNull)
@@ -119,7 +108,7 @@ object StatsR9w {
     // counts B (length-2) and A (length-3) with the Chebyshev
     // distance on exact longs — no floats until the final −ln(A/B).
     "q_sample_entropy" -> ((s, d) => {
-      val base = idx(s, d)
+      val base = DailyGrid.mean(s, d)
         .withColumn("y2", lead("y", 1).over(
           Window.partitionBy("event_type").orderBy("i")))
         .withColumn("y3", lead("y", 2).over(
@@ -157,7 +146,7 @@ object StatsR9w {
     // (y_k−y_i)(j−i) < (y_j−y_i)(k−i) stays in exact longs; emits
     // per-type node/edge counts and mean degree.
     "q_visibility_graph" -> ((s, d) => {
-      val base = idx(s, d).localCheckpoint(eager = true)
+      val base = DailyGrid.mean(s, d)
       val cand = base.join(base.select(col("event_type").as("et2"),
           col("i").as("j"), col("y").as("yj")),
           col("et2") === col("event_type") && col("j") > col("i")
@@ -185,7 +174,7 @@ object StatsR9w {
     // Var(Δ) and 2·SD2² = 4·Var(y) − Var(Δ) (sample variances from
     // cleared sums, stated convention); SD1/SD2 in value units.
     "q_poincare" -> ((s, d) => {
-      dailyMean(s, d)
+      DailyGrid.mean(s, d)
         .withColumn("py", lag("y", 1).over(wo))
         .withColumn("dd", col("y") - col("py"))
         .groupBy("event_type")

@@ -18,10 +18,7 @@ import graft.tables.Tables
   */
 object StatsR9x {
 
-  import StatsR9.dailyMean
-  import StatsR9f.dmCte
-
-  private def wo = Window.partitionBy("event_type").orderBy("d")
+  import DailyGrid.{dmCte, wo}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
@@ -141,8 +138,7 @@ object StatsR9x {
     // to 1e9 before the exact sum.
     "q_act_integrated" -> ((s, d) => {
       import s.implicits._
-      val base = dailyMean(s, d)
-        .withColumn("i", row_number().over(wo).cast("long"))
+      val base = DailyGrid.mean(s, d)
         .select(col("event_type"), col("i"), col("y"))
         .localCheckpoint(eager = true)
       val mom = base.groupBy("event_type")
@@ -181,15 +177,14 @@ object StatsR9x {
     // the exact harmonic expectation H_n = Σ1/k (per-term 1e12
     // snap, exact sum) — how trendy vs exchangeable the series is.
     "q_record_stats" -> ((s, d) => {
-      val recs = dailyMean(s, d)
+      val recs = DailyGrid.mean(s, d)
         .withColumn("pm", max("y").over(
           wo.rowsBetween(Window.unboundedPreceding, -1)))
         .withColumn("rec", when(col("pm").isNull
           || col("y") > col("pm"), 1L).otherwise(0L))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("rec").as("n_records"))
-      val harm = dailyMean(s, d)
-        .withColumn("i", row_number().over(wo).cast("long"))
+      val harm = DailyGrid.mean(s, d)
         .select(col("event_type"),
           round(lit(1e12) / col("i")).cast("long").as("h_u"))
         .groupBy("event_type").agg(sum("h_u").as("sh"))

@@ -18,11 +18,7 @@ import graft.tables.Tables
   */
 object StatsR9y {
 
-  import StatsR9.dailyMean
-  import StatsR9f.dmCte
-
-  private def wo = Window.partitionBy("event_type").orderBy("d")
-  private def wp = Window.partitionBy("event_type")
+  import DailyGrid.{dmCte, wo, wp}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
@@ -124,7 +120,7 @@ object StatsR9y {
         (out, df.join(out.select(col("event_type"),
           col("out_d").as("d")), Seq("event_type", "d"), "left_anti"))
       }
-      val base = dailyMean(s, d)
+      val base = DailyGrid.mean(s, d)
         .select(col("event_type"), col("d"), col("y"))
         .localCheckpoint(eager = true)
       val (o1, r1b) = pick(base)
@@ -147,7 +143,7 @@ object StatsR9y {
     // grids cancel; one division each.
     "q_robust_moments" -> ((s, d) => {
       val wr = Window.partitionBy("event_type").orderBy("y", "d")
-      val ranked = dailyMean(s, d)
+      val ranked = DailyGrid.mean(s, d)
         .withColumn("rn", row_number().over(wr).cast("long"))
         .withColumn("n", count(lit(1)).over(wp))
       def oct(m8: Int) =
@@ -178,7 +174,7 @@ object StatsR9y {
     // cleared OLS; t = β·√((n−2)·clr_xx) / √(clr_yy·... assembled as
     // β/se from the exact sums in ONE chain. β near 0 ⇒ unit root.
     "q_adf_lite" -> ((s, d) => {
-      dailyMean(s, d)
+      DailyGrid.mean(s, d)
         .withColumn("py", lag("y", 1).over(wo))
         .filter(col("py").isNotNull)
         .withColumn("dy", col("y") - col("py"))
@@ -208,8 +204,7 @@ object StatsR9y {
     // QS = n(n+2)·Σ ρ_k²/(n−k) in one chain.
     "q_qs_seasonal" -> ((s, d) => {
       import s.implicits._
-      val base = dailyMean(s, d)
-        .withColumn("i", row_number().over(wo).cast("long"))
+      val base = DailyGrid.mean(s, d)
         .select(col("event_type"), col("i"), col("y"))
         .localCheckpoint(eager = true)
       val mom = base.groupBy("event_type")

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.tables.Tables
 
 /** Round-9 wave 26 (SURVEY.md §2 B.10b): ordinal association and
   * serial/spatial autocorrelation over the bounded daily grid —
@@ -20,8 +19,6 @@ import graft.tables.Tables
   */
 object StatsR9z {
 
-  import StatsR9.dailyMean
-
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
 
@@ -29,13 +26,9 @@ object StatsR9z {
     // kendall pair grid with the asymmetric tie denominators —
     // D_yx = (C−D)/(n0−tx) (x the predictor), D_xy = (C−D)/(n0−ty).
     "q_somers_d" -> ((s, d) => {
-      val daily = Tables.events(s, d)
+      val wide = DailyGrid.mean(s, d)
         .filter(col("event_type").isin("click", "purchase"))
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(sum(floor(col("value") * 1e3).cast("long")).as("s_m"),
-          count(lit(1)).as("cnt"))
-        .withColumn("y", expr("s_m div cnt"))
-      val wide = daily.groupBy("d")
+        .groupBy("d")
         .agg(max(when(col("event_type") === "click", col("y"))).as("x"),
           max(when(col("event_type") === "purchase", col("y"))).as("y"))
         .filter(col("x").isNotNull && col("y").isNotNull)
@@ -65,13 +58,9 @@ object StatsR9z {
     // gamma = (C−D)/(C+D) — ties dropped from the denominator
     // entirely (the tau-b / Somers counterpoint).
     "q_gk_gamma" -> ((s, d) => {
-      val daily = Tables.events(s, d)
+      val wide = DailyGrid.mean(s, d)
         .filter(col("event_type").isin("view", "signup"))
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(sum(floor(col("value") * 1e3).cast("long")).as("s_m"),
-          count(lit(1)).as("cnt"))
-        .withColumn("y", expr("s_m div cnt"))
-      val wide = daily.groupBy("d")
+        .groupBy("d")
         .agg(max(when(col("event_type") === "view", col("y"))).as("x"),
           max(when(col("event_type") === "signup", col("y"))).as("y"))
         .filter(col("x").isNotNull && col("y").isNotNull)
@@ -100,13 +89,9 @@ object StatsR9z {
     // D = 30·((n−2)(n−3)D1 + D2 − 2(n−2)D3) / (n(n−1)...(n−4)) gets
     // its single double chain at the end (n ≥ 5 guard).
     "q_hoeffding_d" -> ((s, d) => {
-      val daily = Tables.events(s, d)
+      val wide = DailyGrid.mean(s, d)
         .filter(col("event_type").isin("click", "view"))
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(sum(floor(col("value") * 1e3).cast("long")).as("s_m"),
-          count(lit(1)).as("cnt"))
-        .withColumn("y", expr("s_m div cnt"))
-      val wide = daily.groupBy("d")
+        .groupBy("d")
         .agg(max(when(col("event_type") === "click", col("y"))).as("x"),
           max(when(col("event_type") === "view", col("y"))).as("y"))
         .filter(col("x").isNotNull && col("y").isNotNull)
@@ -156,14 +141,10 @@ object StatsR9z {
     // W = n₁n₂(R̄₂−R̄₁) / ((n₁+n₂)·√(n₁S₁²+n₂S₂²)) with
     // n_k·S_k² = (n_kΣt²−T²)/(4(n_k−1)), t = u−v exact longs.
     "q_brunner_munzel" -> ((s, d) => {
-      val ser = Tables.events(s, d)
+      val ser = DailyGrid.mean(s, d)
         .filter(col("event_type").isin("click", "view"))
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(sum(floor(col("value") * 1e3).cast("long")).as("s_m"),
-          count(lit(1)).as("cnt"))
         .select(when(col("event_type") === "click", 1L).otherwise(2L)
-            .as("g"), col("d"), expr("s_m div cnt").as("y"))
-        .localCheckpoint(eager = true) // bounded grid, 2 cross-join legs
+            .as("g"), col("d"), col("y"))
       val rk = ser.select(col("g").as("g1"), col("d").as("d1"),
           col("y").as("y1"))
         .crossJoin(ser.select(col("g").as("g2"), col("y").as("y2")))
@@ -212,7 +193,7 @@ object StatsR9z {
     // precedent), I = n·Σ_adj/((n−1)·Σz²) in one double chain; the
     // null expectation −1/(n−1) emitted alongside.
     "q_moran_i" -> ((s, d) => {
-      val daily = dailyMean(s, d)
+      val daily = DailyGrid.mean(s, d)
       val st = daily.groupBy(col("event_type").as("et"))
         .agg(count(lit(1)).as("n"), sum("y").as("sm"))
       val z = daily.join(broadcast(st),
@@ -239,7 +220,7 @@ object StatsR9z {
     // day-to-day), Σz² the decimal carrier, and
     // C = n²·Σd²/(2·Σz²) in one double chain (1 = no autocorrelation).
     "q_geary_c" -> ((s, d) => {
-      val daily = dailyMean(s, d)
+      val daily = DailyGrid.mean(s, d)
       val st = daily.groupBy(col("event_type").as("et"))
         .agg(count(lit(1)).as("n"), sum("y").as("sm"))
       val z = daily.join(broadcast(st),

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.tables.Tables
 
 /** Round-9 wave 29 (SURVEY.md §2 B.10b): regression diagnostics and
   * causal identification on the daily event grid — Breusch-Pagan
@@ -26,14 +25,13 @@ import graft.tables.Tables
   */
 object StatsR9zc {
 
-  private def wo = Window.partitionBy("event_type").orderBy("d")
+  import DailyGrid.wo
 
   /** Per-type day-indexed milli-mean series with OLS moments vs the
     * index — the shared seed of the four diagnostic keys.
     */
   private def indexed(s: SparkSession, d: String): DataFrame =
-    StatsR9.dailyMean(s, d)
-      .withColumn("i", row_number().over(wo).cast("long"))
+    DailyGrid.mean(s, d)
       .select(col("event_type"), col("i"), col("y"))
 
   private def mom(df: DataFrame): DataFrame =
@@ -168,11 +166,11 @@ object StatsR9zc {
     // (ȳ_we − ȳ_wd)/(c̄_we − c̄_wd) from exact long day sums; the
     // first stage is emitted alongside.
     "q_iv_wald" -> ((s, d) => {
-      val day = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(sum(when(col("event_type") === "purchase",
-            floor(col("value") * 1e3).cast("long")).otherwise(0L)).as("y"),
-          sum(when(col("event_type") === "click", 1L).otherwise(0L))
+      val day = DailyGrid.mean(s, d)
+        .groupBy("d")
+        .agg(sum(when(col("event_type") === "purchase", col("s_m"))
+            .otherwise(0L)).as("y"),
+          sum(when(col("event_type") === "click", col("cnt")).otherwise(0L))
             .as("c"))
         .withColumn("we", dayofweek(col("d")).isin(1, 7))
       day.agg(
@@ -200,14 +198,7 @@ object StatsR9zc {
     // cutoff), local-linear windows u ∈ [−13,−1] / [1,13]; effect =
     // right intercept − left intercept at u = 0, from exact moments.
     "q_rdd_estimate" -> ((s, d) => {
-      val day = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(sum(floor(col("value") * 1e3).cast("long")).as("s_m"),
-          count(lit(1)).as("cnt"))
-        .withColumn("y", expr("s_m div cnt"))
-        // bounded grain: one row per day
-        .withColumn("i",
-          row_number().over(Window.orderBy("d")).cast("long"))
+      val day = DailyGrid.market(s, d)
         .withColumn("u", lit(2L) * col("i") - 31L)
         .filter(abs(col("u")) >= 1 && abs(col("u")) <= 13)
         .withColumn("side", when(col("u") < 0, lit("L")).otherwise(lit("R")))
@@ -234,7 +225,7 @@ object StatsR9zc {
   )
 
   private val ixCte: String =
-    s"""${StatsR9f.dmCte},
+    s"""${DailyGrid.dmCte},
       |ix AS (
       |  SELECT event_type,
       |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY d)

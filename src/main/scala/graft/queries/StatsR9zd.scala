@@ -2,8 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import graft.tables.Tables
 
 /** Round-9 wave 30 (SURVEY.md §2 B.10b): market-microstructure and
   * technical-analysis keys on the shared daily OHLC grid — Roll's
@@ -14,37 +12,14 @@ import graft.tables.Tables
   * 14-day Vortex indicator pair, and the 13-day SMA force index.
   *
   * All inputs are the centi-snapped (h, l, c, vol) daily rollup from
-  * StatsR8e.dailyOhlc; every window sum/moment stays in longs and the
+  * DailyGrid.ohlc; every window sum/moment stays in longs and the
   * one double chain per key is spelled identically in the oracle.
   * Scale: the grid is types × days rows — constant in corpus size;
   * the windows are ROWS-bounded and partition by type.
   */
 object StatsR9zd {
 
-  import StatsR8e.{dailyOhlc, dailyCte}
-
-  private def wd = Window.partitionBy("event_type").orderBy("d")
-
-  /** µ-snapped all-type market log return by day (the q_rdd_estimate
-    * all-event grain, the q_volatility return convention).
-    */
-  private[queries] def marketRet(s: SparkSession, d: String): DataFrame = {
-    // r13 opt: the all-types day totals are an exact rollup of the
-    // session-memoized dailyMean grid (Σ per-type s_m / Σ cnt — floor
-    // is per event, so the partial sums regroup losslessly); the
-    // events scan no longer re-runs per consumer
-    val day = StatsR9.dailyMean(s, d)
-      .groupBy("d")
-      .agg(sum("s_m").as("s_m"), sum("cnt").as("cnt"))
-      .withColumn("y", expr("s_m div cnt"))
-    // bounded grain: one row per day — the lag window never sees
-    // corpus-sized input
-    day.withColumn("py", lag("y", 1).over(Window.orderBy("d")))
-      .filter(col("py").isNotNull)
-      .select(col("d"),
-        round(log(col("y").cast("double") / col("py")) * 1e6)
-          .cast("long").as("rm_u"))
-  }
+  import DailyGrid.{dailyCte, wo}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
@@ -54,12 +29,12 @@ object StatsR9zd {
     // 2·√(−cov) in value units when the autocov is negative, NULL
     // otherwise (stated — positive autocov has no Roll solution).
     "q_roll_spread" -> ((s, d) => {
-      val dc = dailyOhlc(s, d)
-        .withColumn("pc", lag("c", 1).over(wd))
+      val dc = DailyGrid.ohlc(s, d)
+        .withColumn("pc", lag("c", 1).over(wo))
         .filter(col("pc").isNotNull)
         .withColumn("dc", col("c") - col("pc"))
       val pairs = dc
-        .withColumn("pdc", lag("dc", 1).over(wd))
+        .withColumn("pdc", lag("dc", 1).over(wo))
         .filter(col("pdc").isNotNull)
       pairs.groupBy("event_type")
         .agg(count(lit(1)).as("m"), sum("dc").as("sa"),
@@ -80,8 +55,8 @@ object StatsR9zd {
     // order-flow proxy q = vol·sign(Δc) (stated proxy), cleared
     // moments, λ in cents per unit flow.
     "q_kyle_lambda" -> ((s, d) => {
-      val f = dailyOhlc(s, d)
-        .withColumn("pc", lag("c", 1).over(wd))
+      val f = DailyGrid.ohlc(s, d)
+        .withColumn("pc", lag("c", 1).over(wo))
         .filter(col("pc").isNotNull)
         .withColumn("dc", col("c") - col("pc"))
         .withColumn("q", col("vol") * when(col("dc") > 0, 1L)
@@ -104,8 +79,8 @@ object StatsR9zd {
     // return pair, β = cxy/cxx, α = (Σr − β·Σrm)/n back in daily
     // log-return units.
     "q_jensen_alpha" -> ((s, d) => {
-      val r = StatsR9.dailyRet(s, d)
-      val j = r.join(marketRet(s, d), "d")
+      val r = DailyGrid.ret(s, d)
+      val j = r.join(DailyGrid.marketRet(s, d), "d")
       j.groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("rm_u").as("sx"),
           sum("r_u").as("sy"),
@@ -126,9 +101,9 @@ object StatsR9zd {
     // integer window extrema, the half-units divide once into value
     // units (÷200 / ÷400 of the cleared sums, stated).
     "q_ichimoku" -> ((s, d) => {
-      val w9 = wd.rowsBetween(-8, 0)
-      val w26 = wd.rowsBetween(-25, 0)
-      dailyOhlc(s, d)
+      val w9 = wo.rowsBetween(-8, 0)
+      val w26 = wo.rowsBetween(-25, 0)
+      DailyGrid.ohlc(s, d)
         .withColumn("n26", count(lit(1)).over(w26))
         .withColumn("t2", max("h").over(w9) + min("l").over(w9))
         .withColumn("k2", max("h").over(w26) + min("l").over(w26))
@@ -144,11 +119,11 @@ object StatsR9zd {
     // max(h−l, |h−c_prev|, |l−c_prev|) — integer window sums, two
     // ratio divisions. Full windows only.
     "q_vortex" -> ((s, d) => {
-      val w14 = wd.rowsBetween(-13, 0)
-      val lagged = dailyOhlc(s, d)
-        .withColumn("ph", lag("h", 1).over(wd))
-        .withColumn("pl", lag("l", 1).over(wd))
-        .withColumn("pc", lag("c", 1).over(wd))
+      val w14 = wo.rowsBetween(-13, 0)
+      val lagged = DailyGrid.ohlc(s, d)
+        .withColumn("ph", lag("h", 1).over(wo))
+        .withColumn("pl", lag("l", 1).over(wo))
+        .withColumn("pc", lag("c", 1).over(wo))
         .filter(col("pc").isNotNull)
         .withColumn("vmp", abs(col("h") - col("pl")))
         .withColumn("vmm", abs(col("l") - col("ph")))
@@ -169,9 +144,9 @@ object StatsR9zd {
     // Force index, 13-day SMA variant (stated — no EMA recursion):
     // FI = (c − c_prev)·vol exact longs, window mean in value units.
     "q_force_index" -> ((s, d) => {
-      val w13 = wd.rowsBetween(-12, 0)
-      dailyOhlc(s, d)
-        .withColumn("pc", lag("c", 1).over(wd))
+      val w13 = wo.rowsBetween(-12, 0)
+      DailyGrid.ohlc(s, d)
+        .withColumn("pc", lag("c", 1).over(wo))
         .filter(col("pc").isNotNull)
         .withColumn("fi", (col("c") - col("pc")) * col("vol"))
         .withColumn("n13", count(lit(1)).over(w13))
@@ -251,7 +226,7 @@ object StatsR9zd {
 
     // identical µ-snapped CAPM moments
     "q_jensen_alpha" ->
-      s"""WITH ${StatsR9.retCte},
+      s"""WITH ${DailyGrid.retCte},
         |$mrCte,
         |j AS (
         |  SELECT ret.event_type, ret.r_u, mr.rm_u

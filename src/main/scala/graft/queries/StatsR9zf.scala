@@ -24,6 +24,8 @@ import graft.tables.Tables
   */
 object StatsR9zf {
 
+  import DailyGrid.wp
+
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
 
@@ -82,8 +84,7 @@ object StatsR9zf {
       val w = Window.partitionBy("event_type").orderBy("h")
       val ranked = hv
         .withColumn("rk", row_number().over(w).cast("long"))
-        .withColumn("nh", count(lit(1)).over(
-          Window.partitionBy("event_type")))
+        .withColumn("nh", count(lit(1)).over(wp))
       val tru = Tables.events(s, d)
         .groupBy("event_type")
         .agg(countDistinct("user_id").as("true_distinct"))
@@ -108,11 +109,11 @@ object StatsR9zf {
     "q_transfer_entropy" -> ((s, d) => {
       // bounded grain: one row per day
       val wd = Window.orderBy("d")
-      val day = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("d"))
-        .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L))
+      val day = DailyGrid.mean(s, d)
+        .groupBy("d")
+        .agg(sum(when(col("event_type") === "click", col("cnt")).otherwise(0L))
             .as("c"),
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
+          sum(when(col("event_type") === "purchase", col("cnt")).otherwise(0L))
             .as("p"))
         .withColumn("a", (col("c") > lag("c", 1).over(wd)).cast("long"))
         .withColumn("b", (col("p") > lag("p", 1).over(wd)).cast("long"))
@@ -167,7 +168,7 @@ object StatsR9zf {
     // kruskal grid), day totals R2, tie-corrected
     // W = (3·(n·ΣR2²−(ΣR2)²)/n) / (m²(n³−n) − m·ΣT).
     "q_kendall_w" -> ((s, d) => {
-      val dm = StatsR9.dailyMean(s, d)
+      val dm = DailyGrid.mean(s, d)
         .select(col("event_type"), col("d"), col("y"))
         .localCheckpoint(eager = true)
       val wv = Window.partitionBy("event_type").orderBy("y")
@@ -370,7 +371,7 @@ object StatsR9zf {
 
     // identical doubled-midrank day totals
     "q_kendall_w" ->
-      s"""WITH ${StatsR9f.dmCte},
+      s"""WITH ${DailyGrid.dmCte},
         |vb AS (
         |  SELECT event_type, y, CAST(COUNT(*) AS BIGINT) AS cnt,
         |    SUM(COUNT(*)) OVER (PARTITION BY event_type ORDER BY y

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.tables.Tables
 
 /** Round-9 wave 33 (SURVEY.md §2 B.10b): the two-sample
   * nonparametric battery on the click(g=1)/view(g=2) daily milli-mean
@@ -24,10 +23,10 @@ import graft.tables.Tables
 object StatsR9zg {
 
   /** (g, d, y): g=1 click, g=2 view, y = daily milli-mean. */
-  // rides the session-memoized dailyMean grid (r13 opt): same exact
-  // milli-mean rollup, filtered + relabeled at the bounded day grain
+  // the session's DailyGrid.mean, filtered + relabeled at the
+  // bounded day grain
   private def ser(s: SparkSession, d: String): DataFrame =
-    StatsR9.dailyMean(s, d)
+    DailyGrid.mean(s, d)
       .filter(col("event_type").isin("click", "view"))
       .select(when(col("event_type") === "click", 1L).otherwise(2L)
           .as("g"), col("d"), col("y"))

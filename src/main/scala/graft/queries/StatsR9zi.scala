@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.tables.Tables
 
 /** Round-9 wave 36 (SURVEY.md §2 B.10b): trade-flow analytics on the
@@ -86,16 +85,7 @@ object StatsR9zi {
     // (inliers DESC, i, j).
     "q_ransac_lite" -> ((s, d) => {
       import s.implicits._
-      val day = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("dd"))
-        .agg(sum(floor(col("value") * 1e3).cast("long")).as("s_m"),
-          count(lit(1)).as("cnt"))
-        .withColumn("y", expr("s_m div cnt"))
-        // bounded grain: one row per day
-        .withColumn("i",
-          row_number().over(Window.orderBy("dd")).cast("long"))
-        .select("i", "y")
-        .localCheckpoint(eager = true)
+      val day = DailyGrid.market(s, d).select("i", "y")
       val pairs = Seq((1L, 8L), (1L, 15L), (8L, 22L), (15L, 29L),
         (1L, 29L), (8L, 15L), (15L, 22L), (22L, 29L))
         .toDF("ai", "aj")

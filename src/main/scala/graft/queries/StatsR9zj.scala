@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.tables.Tables
 
 /** Round-9 wave 37 (SURVEY.md §2 B.10b): method-agreement and
   * dependence keys on the click(x)/view(y) daily pair grid — Lin's
@@ -19,9 +18,11 @@ import graft.tables.Tables
   */
 object StatsR9zj {
 
+  import DailyGrid.wp
+
   /** (d, x, y): click/view daily milli-means joined by day. */
   private def pairs(s: SparkSession, d: String): DataFrame = {
-    val dm = StatsR9.dailyMean(s, d)
+    val dm = DailyGrid.mean(s, d)
     dm.filter(col("event_type") === "click")
       .select(col("d"), col("y").as("x"))
       .join(dm.filter(col("event_type") === "view")
@@ -110,7 +111,7 @@ object StatsR9zj {
     // Pairwise win ratio x vs y (all day pairs, τ=0 stated): WR =
     // wins/losses, and the tie-share-aware p_win = (2w+t)/(2N).
     "q_win_ratio" -> ((s, d) => {
-      val dm = StatsR9.dailyMean(s, d)
+      val dm = DailyGrid.mean(s, d)
       val xs = dm.filter(col("event_type") === "click")
         .select(col("y").as("x"))
       val ys = dm.filter(col("event_type") === "view")
@@ -164,12 +165,11 @@ object StatsR9zj {
     // handled exactly via the per-unit (m_u−1) divisor ×lcm clearing
     // — here m_u = #types present that day (gated > 1).
     "q_krippendorff" -> ((s, d) => {
-      val dm = StatsR9.dailyMean(s, d)
+      val dm = DailyGrid.mean(s, d)
       val wg = Window.partitionBy("event_type").orderBy("y", "d")
       val base = dm
         .withColumn("rg", row_number().over(wg).cast("long"))
-        .withColumn("ng", count(lit(1)).over(
-          Window.partitionBy("event_type")))
+        .withColumn("ng", count(lit(1)).over(wp))
       val med2 = base.groupBy("event_type")
         .agg(sum(when(col("rg") === expr("(ng + 1) div 2"), col("y"))
           .otherwise(0L)
@@ -201,7 +201,7 @@ object StatsR9zj {
   val oracle: Map[String, String] = Map(
     // identical one-division CCC
     "q_lin_ccc" ->
-      (s"WITH ${StatsR9f.dmCte}, $pairCte," +
+      (s"WITH ${DailyGrid.dmCte}, $pairCte," +
       """
         |ag AS (
         |  SELECT CAST(COUNT(*) AS BIGINT) AS n, SUM(x) AS sx,
@@ -220,7 +220,7 @@ object StatsR9zj {
 
     // identical 625/2401 exact outside test
     "q_bland_altman" ->
-      (s"WITH ${StatsR9f.dmCte}, $pairCte," +
+      (s"WITH ${DailyGrid.dmCte}, $pairCte," +
       """
         |df AS (SELECT d, x - y AS dd FROM pr),
         |m AS (
@@ -249,7 +249,7 @@ object StatsR9zj {
 
     // identical closed-form Deming chain
     "q_deming" ->
-      (s"WITH ${StatsR9f.dmCte}, $pairCte," +
+      (s"WITH ${DailyGrid.dmCte}, $pairCte," +
       """
         |ag AS (
         |  SELECT CAST(COUNT(*) AS BIGINT) AS n, SUM(x) AS sx,
@@ -274,7 +274,7 @@ object StatsR9zj {
 
     // identical pairwise tallies
     "q_win_ratio" ->
-      (s"WITH ${StatsR9f.dmCte}," +
+      (s"WITH ${DailyGrid.dmCte}," +
       """
         |xs AS (SELECT y AS x FROM dm WHERE event_type = 'click'),
         |ys AS (SELECT y AS yy FROM dm WHERE event_type = 'view'),
@@ -295,7 +295,7 @@ object StatsR9zj {
 
     // identical rank-copula tail flags
     "q_copula_tail_dep" ->
-      (s"WITH ${StatsR9f.dmCte}, $pairCte," +
+      (s"WITH ${DailyGrid.dmCte}, $pairCte," +
       """
         |rk AS (
         |  SELECT
@@ -317,7 +317,7 @@ object StatsR9zj {
 
     // identical doubled-µ medians and ×12-cleared D_o
     "q_krippendorff" ->
-      (s"WITH ${StatsR9f.dmCte}," +
+      (s"WITH ${DailyGrid.dmCte}," +
       """
         |rg AS (
         |  SELECT event_type, d, y,

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.tables.Tables
 
 /** Round-9 wave 38 (SURVEY.md §2 B.10b): pricing and quality-control
@@ -57,9 +56,8 @@ object StatsR9zk {
     // counted by the exact 1000·nb·sum5 vs 1000·ΣS ± 2885·ΣR
     // comparison.
     "q_xbar_r_chart" -> ((s, d) => {
-      val wo = Window.partitionBy("event_type").orderBy("d")
-      val blocks = StatsR9.dailyMean(s, d)
-        .withColumn("i", row_number().over(wo).cast("long") - 1)
+      val blocks = DailyGrid.mean(s, d)
+        .withColumn("i", col("i") - 1)
         .withColumn("blk", expr("i div 5"))
         .groupBy("event_type", "blk")
         .agg(count(lit(1)).as("bn"), sum("y").as("sum5"),
@@ -218,7 +216,7 @@ object StatsR9zk {
 
     // identical 577/1000 cleared OOC tests
     "q_xbar_r_chart" ->
-      (s"WITH ${StatsR9f.dmCte}," +
+      (s"WITH ${DailyGrid.dmCte}," +
       """
         |ix AS (
         |  SELECT event_type, y,

@@ -108,16 +108,15 @@ object StatsR9zl {
     // (det = Sxx·Smm − Sxm²), b = (Sxx·Smy − Sxm·Sxy)/det, c' =
     // (Smm·Sxy − Sxm·Smy)/det; indirect = a·b, total = Sxy/Sxx.
     "q_mediation_lite" -> ((s, d) => {
-      val day = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("dd"))
-        .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L))
+      val day = DailyGrid.mean(s, d)
+        .groupBy("d")
+        .agg(sum(when(col("event_type") === "click", col("cnt")).otherwise(0L))
             .as("m"),
-          sum(when(col("event_type") === "purchase",
-            floor(col("value") * 1e3).cast("long")).otherwise(0L))
-            .as("y"))
+          sum(when(col("event_type") === "purchase", col("s_m"))
+            .otherwise(0L)).as("y"))
         // bounded grain: one row per day
         .withColumn("x",
-          row_number().over(Window.orderBy("dd")).cast("long"))
+          row_number().over(Window.orderBy("d")).cast("long"))
       day.agg(count(lit(1)).as("n"), sum("x").as("sx"), sum("m").as("sm"),
           sum("y").as("sy"), sum(col("x") * col("m")).as("sxm"),
           sum(col("x") * col("y")).as("sxy"),

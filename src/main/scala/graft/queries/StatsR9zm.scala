@@ -20,6 +20,8 @@ import graft.tables.Tables
   */
 object StatsR9zm {
 
+  import DailyGrid.{wo, wp}
+
   /** Per-(label, dim) snapped centroid + counts, per-label snapped
     * Σx², and the global snapped centroid — the shared seed of the
     * three validity indices. All BOUNDED (10 labels × 64 dims).
@@ -128,9 +130,8 @@ object StatsR9zm {
     // windows, med and MAD by array sort (integers), outlier iff
     // 10000·|x−med| > 3·14826·MAD (1.4826 = 14826/10000, stated).
     "q_hampel" -> ((s, d) => {
-      val wArr = Window.partitionBy("event_type").orderBy("d")
-        .rowsBetween(-3, 3)
-      StatsR9.dailyMean(s, d)
+      val wArr = wo.rowsBetween(-3, 3)
+      DailyGrid.mean(s, d)
         .withColumn("arr", collect_list("y").over(wArr))
         .filter(size(col("arr")) === 7)
         .withColumn("med", element_at(array_sort(col("arr")), 4))
@@ -150,10 +151,9 @@ object StatsR9zm {
     // T = med2/2 + Σw·(2y−med2)/(2Σw), back in value units.
     "q_tukey_biweight" -> ((s, d) => {
       val wg = Window.partitionBy("event_type").orderBy("y", "d")
-      val base = StatsR9.dailyMean(s, d)
+      val base = DailyGrid.mean(s, d)
         .withColumn("rg", row_number().over(wg).cast("long"))
-        .withColumn("ng", count(lit(1)).over(
-          Window.partitionBy("event_type")))
+        .withColumn("ng", count(lit(1)).over(wp))
       val med2 = base.groupBy("event_type")
         .agg(sum(when(col("rg") === expr("(ng + 1) div 2"), col("y"))
           .otherwise(0L)
@@ -317,7 +317,7 @@ object StatsR9zm {
 
     // identical integer med/MAD windows
     "q_hampel" ->
-      (s"WITH ${StatsR9f.dmCte}," +
+      (s"WITH ${DailyGrid.dmCte}," +
       """
         |w AS (
         |  SELECT event_type, y,
@@ -336,7 +336,7 @@ object StatsR9zm {
 
     // identical doubled-grid one-step biweight
     "q_tukey_biweight" ->
-      (s"WITH ${StatsR9f.dmCte}," +
+      (s"WITH ${DailyGrid.dmCte}," +
       """
         |rg AS (
         |  SELECT event_type, d, y,

@@ -18,6 +18,8 @@ import graft.tables.Tables
   */
 object StatsR9zn {
 
+  import DailyGrid.wo
+
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
 
@@ -26,9 +28,8 @@ object StatsR9zn {
     // longest missing run comes from the island trick on the filled
     // flag.
     "q_densify_days" -> ((s, d) => {
-      val act = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("dd"))
-        .agg(count(lit(1)).as("n"))
+      val act = DailyGrid.mean(s, d)
+        .select(col("event_type"), col("d").as("dd"), col("cnt").as("n"))
       val span = act.groupBy("event_type")
         .agg(min("dd").as("lo"), max("dd").as("hi"))
       val cal = span
@@ -144,9 +145,8 @@ object StatsR9zn {
     // PRIOR windows (−14..−1), p90 = 13th order statistic (type-1,
     // ceil(0.9·14), stated); count days strictly above.
     "q_rolling_p90" -> ((s, d) => {
-      val w14 = Window.partitionBy("event_type").orderBy("d")
-        .rowsBetween(-14, -1)
-      StatsR9.dailyMean(s, d)
+      val w14 = wo.rowsBetween(-14, -1)
+      DailyGrid.mean(s, d)
         .withColumn("arr", collect_list("y").over(w14))
         .filter(size(col("arr")) === 14)
         .withColumn("p90", element_at(array_sort(col("arr")), 13))
@@ -293,7 +293,7 @@ object StatsR9zn {
 
     // identical trailing-window order statistic
     "q_rolling_p90" ->
-      (s"WITH ${StatsR9f.dmCte}," +
+      (s"WITH ${DailyGrid.dmCte}," +
       """
         |w AS (
         |  SELECT event_type, d, y,

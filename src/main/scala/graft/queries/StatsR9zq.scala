@@ -16,6 +16,8 @@ import graft.tables.Tables
   */
 object StatsR9zq {
 
+  import DailyGrid.wo
+
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
 
@@ -69,9 +71,8 @@ object StatsR9zq {
     // WAPE and sMAPE of the naive one-step forecast on the daily
     // milli-mean: WAPE exact longs; per-row sMAPE term snapped 1e9.
     "q_wape_smape" -> ((s, d) => {
-      val w = Window.partitionBy("event_type").orderBy("d")
-      StatsR9.dailyMean(s, d)
-        .withColumn("py", lag("y", 1).over(w))
+      DailyGrid.mean(s, d)
+        .withColumn("py", lag("y", 1).over(wo))
         .filter(col("py").isNotNull)
         .withColumn("ae", abs(col("y") - col("py")))
         .withColumn("sm_u", round(col("ae") * lit(2e9)
@@ -93,7 +94,7 @@ object StatsR9zq {
     // 1e6·3·d² > q²·1e6·(2n)²·k(k+1)/(12n)·3 — spelled identically
     // both engines (derivation in the row; q=2.728).
     "q_nemenyi" -> ((s, d) => {
-      val dm = StatsR9.dailyMean(s, d).localCheckpoint(eager = true)
+      val dm = DailyGrid.mean(s, d).localCheckpoint(eager = true)
       val rk = dm.select(col("d").as("d1"), col("event_type").as("t1"),
           col("y").as("y1"))
         .join(dm.select(col("d").as("d1"), col("event_type").as("t2"),
@@ -223,7 +224,7 @@ object StatsR9zq {
 
     // identical exact WAPE + snapped sMAPE
     "q_wape_smape" ->
-      (s"WITH ${StatsR9f.dmCte}," +
+      (s"WITH ${DailyGrid.dmCte}," +
       """
         |lg AS (
         |  SELECT event_type, y,
@@ -243,7 +244,7 @@ object StatsR9zq {
 
     // identical doubled ranks and squared-CD clearing
     "q_nemenyi" ->
-      (s"WITH ${StatsR9f.dmCte}," +
+      (s"WITH ${DailyGrid.dmCte}," +
       """
         |rk AS (
         |  SELECT a.event_type AS t1, a.d,

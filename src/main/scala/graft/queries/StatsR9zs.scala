@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.tables.Tables
 
 /** Round-9 wave 46 (SURVEY.md §2 B.10b): normal-fit diagnostics and
   * the attribute/count control-chart pair — Lilliefors KS vs the
@@ -18,6 +17,8 @@ import graft.tables.Tables
   * snap) for the fit tests; the daily event grid for the charts.
   */
 object StatsR9zs {
+
+  import DailyGrid.wo
 
   /** x_u = round(ln(cents)·1e6) per customer + exact moments. */
   private def logRev(s: SparkSession, d: String): DataFrame =
@@ -163,10 +164,10 @@ object StatsR9zs {
     // p-chart: daily purchase share vs p̄ with 3σ binomial limits —
     // OOC iff (x_t·N − n_t·K)² > 9·K·(N−K)·n_t, all longs.
     "q_p_chart" -> ((s, d) => {
-      val day = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("dd"))
-        .agg(count(lit(1)).as("nt"),
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
+      val day = DailyGrid.mean(s, d)
+        .groupBy(col("d").as("dd"))
+        .agg(sum("cnt").as("nt"),
+          sum(when(col("event_type") === "purchase", col("cnt")).otherwise(0L))
             .as("xt"))
         .localCheckpoint(eager = true)
       val tot = day.agg(sum("nt").as("nn"), sum("xt").as("kk"))
@@ -185,9 +186,9 @@ object StatsR9zs {
 
     // c-chart on daily error counts: OOC iff (c_t·N − S)² > 9·S·N.
     "q_c_chart" -> ((s, d) => {
-      val day = Tables.events(s, d)
-        .groupBy(to_date(col("ts")).as("dd"))
-        .agg(sum(when(col("event_type") === "error", 1L).otherwise(0L))
+      val day = DailyGrid.mean(s, d)
+        .groupBy(col("d").as("dd"))
+        .agg(sum(when(col("event_type") === "error", col("cnt")).otherwise(0L))
           .as("ct"))
         .localCheckpoint(eager = true)
       val tot = day.agg(count(lit(1)).as("nd"), sum("ct").as("sc"))
@@ -210,18 +211,17 @@ object StatsR9zs {
     // center line) per type on the daily grid: sides from the exact
     // n·y − Σy sign (zero is its own side and breaks runs, stated).
     "q_we_rules" -> ((s, d) => {
-      val dm = StatsR9.dailyMean(s, d)
+      val dm = DailyGrid.mean(s, d)
       val tot = dm.groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("y").as("sy"))
       val sided = dm.join(tot, "event_type")
         .withColumn("side", signum((col("n") * col("y") - col("sy"))
           .cast("double")).cast("long"))
-      val w = Window.partitionBy("event_type").orderBy("d")
       val runs = sided
-        .withColumn("brk", when(lag("side", 1).over(w).isNull
-          || lag("side", 1).over(w) =!= col("side"), 1L).otherwise(0L))
+        .withColumn("brk", when(lag("side", 1).over(wo).isNull
+          || lag("side", 1).over(wo) =!= col("side"), 1L).otherwise(0L))
         .withColumn("grp", sum("brk").over(
-          w.rowsBetween(Window.unboundedPreceding, 0)))
+          wo.rowsBetween(Window.unboundedPreceding, 0)))
         .groupBy("event_type", "grp", "side")
         .agg(count(lit(1)).as("len"))
       runs.groupBy("event_type")
@@ -353,7 +353,7 @@ object StatsR9zs {
 
     // identical sign-island runs
     "q_we_rules" ->
-      (s"WITH ${StatsR9f.dmCte}," +
+      (s"WITH ${DailyGrid.dmCte}," +
       """
         |tot AS (
         |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,

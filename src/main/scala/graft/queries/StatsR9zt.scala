@@ -17,6 +17,8 @@ import graft.tables.Tables
   */
 object StatsR9zt {
 
+  import DailyGrid.wo
+
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
 
@@ -124,7 +126,7 @@ object StatsR9zt {
     // (ties excluded, stated): π_i = W_i/(C_i/2) from the uniform
     // start, normalized to Σπ = 1.
     "q_bradley_terry" -> ((s, d) => {
-      val dm = StatsR9.dailyMean(s, d).localCheckpoint(eager = true)
+      val dm = DailyGrid.mean(s, d).localCheckpoint(eager = true)
       val pairs = dm.select(col("d").as("dd"), col("event_type")
           .as("t1"), col("y").as("y1"))
         .join(dm.select(col("d").as("dd"), col("event_type").as("t2"),
@@ -149,13 +151,11 @@ object StatsR9zt {
     // y_{t−7}, drift y_{t−1} + (y_{t−1} − y_1)/(t−2), combo = mean;
     // drift/combo per-row errors snapped 1e6.
     "q_forecast_combo" -> ((s, d) => {
-      val w = Window.partitionBy("event_type").orderBy("d")
-      val base = StatsR9.dailyMean(s, d)
-        .withColumn("i", row_number().over(w).cast("long"))
-        .withColumn("p1", lag("y", 1).over(w))
-        .withColumn("p7", lag("y", 7).over(w))
+      val base = DailyGrid.mean(s, d)
+        .withColumn("p1", lag("y", 1).over(wo))
+        .withColumn("p7", lag("y", 7).over(wo))
         .withColumn("y1", first("y").over(
-          w.rowsBetween(Window.unboundedPreceding, 0)))
+          wo.rowsBetween(Window.unboundedPreceding, 0)))
         .filter(col("i") >= 8)
         .withColumn("drift", col("p1")
           + (col("p1") - col("y1")).cast("double") / (col("i") - 2))
@@ -304,7 +304,7 @@ object StatsR9zt {
         |FROM sc GROUP BY 1 ORDER BY 1""".stripMargin,
 
     // identical one-step MM
-    "q_bradley_terry" -> (s"WITH ${StatsR9f.dmCte}," +
+    "q_bradley_terry" -> (s"WITH ${DailyGrid.dmCte}," +
       """
         |pairs AS (
         |  SELECT a.event_type AS t1, a.y AS y1, b.y AS y2
@@ -327,7 +327,7 @@ object StatsR9zt {
         |FROM pr, tot ORDER BY event_type""".stripMargin),
 
     // identical per-row snapped drift/combo errors
-    "q_forecast_combo" -> (s"WITH ${StatsR9f.dmCte}," +
+    "q_forecast_combo" -> (s"WITH ${DailyGrid.dmCte}," +
       """
         |base AS (
         |  SELECT event_type, y,

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.tables.Tables
 
 /** Round-9 wave 49 (SURVEY.md §2 B.10b): SMA crossover counting on
@@ -15,6 +14,8 @@ import graft.tables.Tables
   * high-value rates to the overall hour-of-day mix.
   */
 object StatsR9zv {
+
+  import DailyGrid.wo
 
   /** Per-(type, 2×2) weekend × high-value (v>100, stated) counts
     * with the Haldane +0.5 correction applied in the chain. */
@@ -54,17 +55,14 @@ object StatsR9zv {
     // long; crossings counted between consecutive NONZERO signs
     // (zeros dropped, stated).
     "q_sma_crossover" -> ((s, d) => {
-      val w5 = Window.partitionBy("event_type").orderBy("d")
-        .rowsBetween(-4, 0)
-      val w20 = Window.partitionBy("event_type").orderBy("d")
-        .rowsBetween(-19, 0)
-      val base = StatsR8e.dailyOhlc(s, d)
+      val w5 = wo.rowsBetween(-4, 0)
+      val w20 = wo.rowsBetween(-19, 0)
+      val base = DailyGrid.ohlc(s, d)
         .withColumn("n20", count(lit(1)).over(w20))
         .withColumn("sgn", signum((lit(4L) * sum("c").over(w5)
           - sum("c").over(w20)).cast("double")).cast("long"))
         .filter(col("n20") === 20 && col("sgn") =!= 0)
-      val wl = Window.partitionBy("event_type").orderBy("d")
-      base.withColumn("ps", lag("sgn", 1).over(wl))
+      base.withColumn("ps", lag("sgn", 1).over(wo))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_days_eval"),
           sum(when(col("ps").isNotNull && col("ps") === -1
@@ -79,11 +77,10 @@ object StatsR9zv {
     // ×3-cleared longs divided once; the breakout flag is exact
     // (300·c vs the R1 numerator).
     "q_pivot_points" -> ((s, d) => {
-      val w = Window.partitionBy("event_type").orderBy("d")
-      StatsR8e.dailyOhlc(s, d)
-        .withColumn("p3", lag(col("h") + col("l") + col("c"), 1).over(w))
-        .withColumn("ph", lag("h", 1).over(w))
-        .withColumn("pl", lag("l", 1).over(w))
+      DailyGrid.ohlc(s, d)
+        .withColumn("p3", lag(col("h") + col("l") + col("c"), 1).over(wo))
+        .withColumn("ph", lag("h", 1).over(wo))
+        .withColumn("pl", lag("l", 1).over(wo))
         .filter(col("p3").isNotNull)
         .select(col("event_type"), col("d").cast("string").as("d"),
           round(col("p3") / 300.0, 6).as("pivot"),
@@ -224,7 +221,7 @@ object StatsR9zv {
 
   val oracle: Map[String, String] = Map(
     // identical cleared sign grid
-    "q_sma_crossover" -> (s"WITH ${StatsR8e.dailyCte}," +
+    "q_sma_crossover" -> (s"WITH ${DailyGrid.dailyCte}," +
       """
         |w AS (
         |  SELECT event_type, d,
@@ -248,7 +245,7 @@ object StatsR9zv {
         |FROM f GROUP BY 1 ORDER BY event_type""".stripMargin),
 
     // identical ×3-cleared pivots
-    "q_pivot_points" -> (s"WITH ${StatsR8e.dailyCte}," +
+    "q_pivot_points" -> (s"WITH ${DailyGrid.dailyCte}," +
       """
         |lg AS (
         |  SELECT event_type, d, c,

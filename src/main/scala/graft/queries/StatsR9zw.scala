@@ -71,9 +71,7 @@ object StatsR9zw {
     // stated).
     "q_lead_lag_matrix" -> ((s, d) => {
       import s.implicits._
-      val wo = Window.partitionBy("event_type").orderBy("d")
-      val base = StatsR9.dailyMean(s, d)
-        .withColumn("i", row_number().over(wo).cast("long"))
+      val base = DailyGrid.mean(s, d)
         .select(col("event_type"), col("i"), col("y"))
         .localCheckpoint(eager = true)
       val lags = (-3L to 3L).toDF("lag")
@@ -206,7 +204,7 @@ object StatsR9zw {
         |FROM part GROUP BY 1 ORDER BY brand""".stripMargin,
 
     // identical snapped lag correlations + argmax
-    "q_lead_lag_matrix" -> (s"WITH ${StatsR9f.dmCte}," +
+    "q_lead_lag_matrix" -> (s"WITH ${DailyGrid.dmCte}," +
       """
         |ix AS (
         |  SELECT event_type, y,

@@ -182,9 +182,7 @@ object StatsR9zx {
     // Split-half reliability per type: pair day 2i−1 with day 2i,
     // Pearson r from cleared moments, Spearman-Brown 2r/(1+r).
     "q_split_half" -> ((s, d) => {
-      val wo = Window.partitionBy("event_type").orderBy("d")
-      val ix = StatsR9.dailyMean(s, d)
-        .withColumn("i", row_number().over(wo).cast("long"))
+      val ix = DailyGrid.mean(s, d)
       val odd = ix.filter(col("i") % 2 === 1)
         .select(col("event_type"), ((col("i") + 1) / 2).cast("long")
           .as("p"), col("y").as("yo"))
@@ -362,7 +360,7 @@ object StatsR9zx {
         |FROM xs""".stripMargin,
 
     // identical paired halves
-    "q_split_half" -> (s"WITH ${StatsR9f.dmCte}," +
+    "q_split_half" -> (s"WITH ${DailyGrid.dmCte}," +
       """
         |ix AS (
         |  SELECT event_type, y,

@@ -16,6 +16,8 @@ import graft.tables.Tables
   */
 object StatsR9zz {
 
+  import DailyGrid.{wo, wp}
+
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
 
@@ -23,18 +25,14 @@ object StatsR9zz {
     // DESC, day ASC, stated); CAR = Σ_{τ∈[−2,2]} (r − r_m) in µ
     // units, averaged per type.
     "q_event_study_car" -> ((s, d) => {
-      val wo = Window.partitionBy("event_type").orderBy("d")
-      val r = StatsR9.dailyRet(s, d)
-        .join(StatsR9zd.marketRet(s, d), "d")
+      val r = DailyGrid.ret(s, d)
+        .join(DailyGrid.marketRet(s, d), "d")
         .withColumn("i", row_number().over(wo).cast("long"))
         .withColumn("ab", col("r_u") - col("rm_u"))
         .localCheckpoint(eager = true)
-      val vol = Tables.events(s, d)
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).as("cnt"))
-      val ev = vol.withColumn("rk", row_number().over(
-          Window.partitionBy("event_type")
-            .orderBy(col("cnt").desc, col("d").asc)))
+      val ev = DailyGrid.mean(s, d).select("event_type", "d", "cnt")
+        .withColumn("rk", row_number().over(
+          wp.orderBy(col("cnt").desc, col("d").asc)))
         .filter(col("rk") <= 3)
         .join(r.select(col("event_type"), col("d"),
           col("i").as("e_i")), Seq("event_type", "d"))
@@ -55,7 +53,7 @@ object StatsR9zz {
     // (the adf_lite chain); ρ = 1 + β and half-life −ln2/ln ρ
     // (gated 0 < ρ < 1, stated).
     "q_engle_granger" -> ((s, d) => {
-      val dm = StatsR9.dailyMean(s, d)
+      val dm = DailyGrid.mean(s, d)
       val pr = dm.filter(col("event_type") === "click")
         .select(col("d"), col("y").as("x"))
         .join(dm.filter(col("event_type") === "view")
@@ -247,7 +245,7 @@ object StatsR9zz {
 
   val oracle: Map[String, String] = Map(
     // identical top-3 event windows
-    "q_event_study_car" -> (s"WITH ${StatsR9.retCte}, " +
+    "q_event_study_car" -> (s"WITH ${DailyGrid.retCte}, " +
       StatsR9zd.mrCte.replace("md AS", "md2 AS")
         .replace("FROM md", "FROM md2") +
       """,
@@ -279,7 +277,7 @@ object StatsR9zz {
         |FROM car GROUP BY 1 ORDER BY event_type""".stripMargin),
 
     // identical snapped residual ADF
-    "q_engle_granger" -> (s"WITH ${StatsR9f.dmCte}," +
+    "q_engle_granger" -> (s"WITH ${DailyGrid.dmCte}," +
       """
         |pr AS (
         |  SELECT cx.d, cx.y AS x, vy.y AS y FROM

@@ -16,6 +16,8 @@ import graft.tables.Tables
   */
 object StatsR9zzb {
 
+  import DailyGrid.wp
+
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
 
@@ -66,10 +68,9 @@ object StatsR9zzb {
     "q_expected_shortfall" -> ((s, d) => {
       val w = Window.partitionBy("event_type")
         .orderBy(col("r_u").asc, col("d").asc)
-      val r = StatsR9.dailyRet(s, d)
+      val r = DailyGrid.ret(s, d)
         .withColumn("rk", row_number().over(w).cast("long"))
-        .withColumn("n", count(lit(1)).over(
-          Window.partitionBy("event_type")).cast("long"))
+        .withColumn("n", count(lit(1)).over(wp).cast("long"))
         .localCheckpoint(eager = true)
       val varq = r.filter(col("rk") === expr("(n + 19) div 20"))
         .select(col("event_type"), col("r_u").as("var_u"))
@@ -234,7 +235,7 @@ object StatsR9zzb {
         |ORDER BY qs.o_orderpriority""".stripMargin,
 
     // identical type-1 tail means
-    "q_expected_shortfall" -> (s"WITH ${StatsR9.retCte}," +
+    "q_expected_shortfall" -> (s"WITH ${DailyGrid.retCte}," +
       """
         |rk AS (
         |  SELECT event_type, d, r_u,

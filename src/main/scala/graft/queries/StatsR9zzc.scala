@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.tables.Tables
 
 /** Round-9 wave 56 (SURVEY.md §2 B.10b): the health-econ
@@ -46,7 +45,7 @@ object StatsR9zzc {
     // e = y − ȳ_type − ȳ_day + ȳ (identical double chains), e²
     // snapped to 1e6; R²_FE = 1 − SSres/SStot with SStot cleared.
     "q_twoway_fe" -> ((s, d) => {
-      val dm = StatsR9.dailyMean(s, d)
+      val dm = DailyGrid.mean(s, d)
         .select(col("event_type").as("t"), col("d"), col("y"))
         .localCheckpoint(eager = true)
       val mt = dm.groupBy("t").agg(count(lit(1)).as("nt"),
@@ -79,7 +78,7 @@ object StatsR9zzc {
     // variance of daily values / days-per-type (balanced n stated as
     // the mean days), shrunk = m̄ + c(m_t − m̄).
     "q_james_stein" -> ((s, d) => {
-      val dm = StatsR9.dailyMean(s, d)
+      val dm = DailyGrid.mean(s, d)
         .select(col("event_type").as("t"), col("y"))
         .localCheckpoint(eager = true)
       val mt = dm.groupBy("t").agg(count(lit(1)).as("nt"),
@@ -170,8 +169,8 @@ object StatsR9zzc {
     // Systematic share per type: R² of the µ-return on the market
     // (the jensen moments), idiosyncratic = 1 − R².
     "q_systematic_share" -> ((s, d) => {
-      val j = StatsR9.dailyRet(s, d)
-        .join(StatsR9zd.marketRet(s, d), "d")
+      val j = DailyGrid.ret(s, d)
+        .join(DailyGrid.marketRet(s, d), "d")
       j.groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("rm_u").as("sx"),
           sum("r_u").as("sy"),
@@ -216,7 +215,7 @@ object StatsR9zzc {
         |FROM ag WHERE sy > 0""".stripMargin,
 
     // identical snapped FE residuals
-    "q_twoway_fe" -> (s"WITH ${StatsR9f.dmCte}," +
+    "q_twoway_fe" -> (s"WITH ${DailyGrid.dmCte}," +
       """
         |mt AS (
         |  SELECT event_type AS t, CAST(COUNT(*) AS BIGINT) AS nt,
@@ -257,7 +256,7 @@ object StatsR9zzc {
         |FROM st WHERE sstot > 0""".stripMargin),
 
     // identical pooled-σ² shrinkage
-    "q_james_stein" -> (s"WITH ${StatsR9f.dmCte}," +
+    "q_james_stein" -> (s"WITH ${DailyGrid.dmCte}," +
       """
         |mt AS (
         |  SELECT event_type AS t, CAST(COUNT(*) AS BIGINT) AS nt,
@@ -337,7 +336,7 @@ object StatsR9zzc {
         |FROM ag WHERE sww > 0""".stripMargin,
 
     // identical R² from the jensen moments
-    "q_systematic_share" -> (s"WITH ${StatsR9.retCte}, " +
+    "q_systematic_share" -> (s"WITH ${DailyGrid.retCte}, " +
       StatsR9zd.mrCte.replace("md AS", "md2 AS")
         .replace("FROM md", "FROM md2") +
       """,

@@ -288,10 +288,10 @@ object StreamCorpus {
     // exact µ-grid half-up mean own-cosine, id span).
     "s_stream_cell_assign" -> ((s, d) => {
       graft.expr.Registry.ensure(s)
-      // data-derived cell count (operators/Cells, r11 VERDICT task 2):
-      // one-row count of the STATIC corpus — bounded by design, read
-      // once at query start exactly like a production index's nlist
-      val cellsK = graft.operators.Cells.k(Tables.embeddings(s, d).count())
+      // data-derived cell count (operators/Cells) from the STATIC
+      // corpus's footer row count, read once at query start exactly
+      // like a production index's nlist
+      val cellsK = graft.operators.Cells.k(Tables.rowCount(s, d, "embeddings"))
       val dir = stageTable(d, "embeddings")
       val packed = Tables.embeddings(s, d)
         .filter(col("vec_id").between(1, cellsK))
@@ -340,9 +340,9 @@ object StreamCorpus {
       val tau = 0.45 // the q_semdedup boundary (p99 of prior-cos)
       val dir = stageTable(d, "embeddings")
       val stat = Tables.embeddings(s, d)
-      // data-derived cell count from the static corpus (one-row
-      // count, bounded by design — operators/Cells)
-      val cellsK = graft.operators.Cells.k(stat.count())
+      // data-derived cell count from the static corpus's footer row
+      // count (operators/Cells)
+      val cellsK = graft.operators.Cells.k(Tables.rowCount(s, d, "embeddings"))
       val packed = stat
         .filter(col("vec_id").between(1, cellsK))
         .select(col("vec_id").cast("int").as("cell"),

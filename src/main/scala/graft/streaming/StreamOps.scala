@@ -2,9 +2,6 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
@@ -180,19 +177,9 @@ object StreamOps {
   }
 
   /** Last block of the burn keys' synthetic range: one block per 100
-    * event rows, at least 100 blocks. The row count comes from the
-    * events parquet footers, so sizing runs no Spark job. */
-  private def burnEndBlock(s: SparkSession, d: String): Long = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val p = new Path(s"$d/events.parquet")
-    val rows = p.getFileSystem(conf).listStatus(p)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .map { f =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
-        try r.getRecordCount finally r.close()
-      }.sum
-    math.max(100L, rows / 100) - 1
-  }
+    * event rows, at least 100 blocks. */
+  private def burnEndBlock(s: SparkSession, d: String): Long =
+    math.max(100L, Tables.rowCount(s, d, "events") / 100) - 1
 
   /** RocksDB state store, which transformWithState requires. */
   private val rocksDbProvider = "spark.sql.streaming.stateStore.providerClass" ->

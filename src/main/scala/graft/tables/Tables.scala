@@ -1,5 +1,8 @@
 package graft.tables
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Typed readers for the driver-generated parquet tables
@@ -74,4 +77,17 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame = rd(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = rd(s, d, "embeddings")
+
+  /** Row count of a table, summed from its parquet footers: sizing a
+    * key by its input runs no Spark job. */
+  def rowCount(s: SparkSession, d: String, table: String): Long = {
+    val conf = s.sparkContext.hadoopConfiguration
+    val p = new Path(s"$d/$table.parquet")
+    p.getFileSystem(conf).listStatus(p)
+      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      .map { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        try r.getRecordCount finally r.close()
+      }.sum
+  }
 }

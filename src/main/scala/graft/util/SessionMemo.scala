@@ -14,7 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The contract every memo follows:
   *  - Key naming: the key names the derivation and ALL of its
-  *    parameters, data dir included, e.g. s"dailyMean:$d" or
+  *    parameters, data dir included, e.g. s"dailyCenti:$d" or
   *    s"pairs:$d:$kind:$tau". Every memo shares this one key space, so
   *    two derivations never share a key.
   *  - One checkpoint: [[of]] eagerly localCheckpoints the built frame

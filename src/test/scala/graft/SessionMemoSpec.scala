@@ -14,21 +14,46 @@ class SessionMemoSpec extends AnyFunSuite with SparkFixture {
     df.collect().map(_.toString).sorted.toSeq
 
   test("memoized frame equals a fresh derivation (dailyMean grid)") {
-    val memo = queries.StatsR9.dailyMean(spark, sf)
-    // the un-memoized expression, written out fresh
-    val fresh = tables.Tables.events(spark, sf)
+    val ev = tables.Tables.events(spark, sf)
+    val wo = org.apache.spark.sql.expressions.Window
+      .partitionBy("event_type").orderBy("d")
+    // the un-memoized expressions, written out fresh from the events
+    val mean = ev
       .groupBy(col("event_type"), to_date(col("ts")).as("d"))
       .agg(sum(floor(col("value") * 1e3).cast("long")).as("s_m"),
         count(lit(1)).as("cnt"))
       .withColumn("y", expr("s_m div cnt"))
-    assert(memo.schema.map(f => (f.name, f.dataType)) ===
-      fresh.schema.map(f => (f.name, f.dataType)))
-    assert(rows(memo) === rows(fresh))
+      .withColumn("i", row_number().over(wo).cast("long"))
+    val market = ev
+      .groupBy(to_date(col("ts")).as("d"))
+      .agg(sum(floor(col("value") * 1e3).cast("long")).as("s_m"),
+        count(lit(1)).as("cnt"))
+      .withColumn("y", expr("s_m div cnt"))
+      .withColumn("i", row_number().over(
+        org.apache.spark.sql.expressions.Window.orderBy("d")).cast("long"))
+    val at = struct(col("ts"), col("event_id"))
+    val ohlc = ev
+      .select(col("event_type"), to_date(col("ts")).as("d"),
+        round(col("value") * 100).cast("long").as("v_c"),
+        col("ts"), col("event_id"))
+      .groupBy("event_type", "d")
+      .agg(max("v_c").as("h"), min("v_c").as("l"),
+        max_by(col("v_c"), at).as("c"), count(lit(1)).as("vol"),
+        min_by(col("v_c"), at).as("o"))
+      .withColumn("i", row_number().over(wo).cast("long"))
+    for ((memo, fresh) <- Seq(
+        queries.DailyGrid.mean(spark, sf) -> mean,
+        queries.DailyGrid.market(spark, sf) -> market,
+        queries.DailyGrid.ohlc(spark, sf) -> ohlc)) {
+      assert(memo.schema.map(f => (f.name, f.dataType)) ===
+        fresh.schema.map(f => (f.name, f.dataType)))
+      assert(rows(memo) === rows(fresh))
+    }
   }
 
   test("second call serves the same materialized frame (no re-derivation)") {
-    val a = queries.StatsR9.dailyMean(spark, sf)
-    val b = queries.StatsR9.dailyMean(spark, sf)
+    val a = queries.DailyGrid.mean(spark, sf)
+    val b = queries.DailyGrid.mean(spark, sf)
     assert(a eq b, "SessionMemo must return the cached instance")
     val p = queries.Analytics.recsTop3(spark, sf)
     val q = queries.Analytics.recsTop3(spark, sf)
@@ -38,7 +63,7 @@ class SessionMemoSpec extends AnyFunSuite with SparkFixture {
   test("memoized frame is materialized (plan is a scan, not the derivation)") {
     // the memo eagerly localCheckpoints: consumers scan an RDD, they do
     // not re-run the events scan + aggregation per call
-    val memo = queries.StatsR9.dailyMean(spark, sf)
+    val memo = queries.DailyGrid.mean(spark, sf)
     val plan = memo.queryExecution.optimizedPlan
     assert(plan.collectLeaves().forall(
       _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]),
@@ -90,34 +115,6 @@ class SessionMemoSpec extends AnyFunSuite with SparkFixture {
       .filter(col("jw") >= 0.92)
       .select(col("a_id"), col("c.b_id").as("b_id"), col("jw"))
     assert(rows(memo) === rows(fresh))
-  }
-
-  /** Jobs `body` starts. A marker job follows it in the same group,
-    * and a listener sees job starts in order, so once the marker's
-    * start is seen every job of `body` has been counted. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"memo-pin-${System.nanoTime}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
-          if (e.properties.getProperty("spark.job.description") == "marker") markerSeen.countDown()
-          else jobs.incrementAndGet()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      try {
-        body
-        sc.setJobDescription("marker")
-        spark.range(1).count()
-      } finally sc.clearJobGroup()
-      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      jobs.get
-    } finally sc.removeSparkListener(listener)
   }
 
   test("memos that had their own (context, sfDir) maps stay apart in the shared key space") {
