@@ -34,12 +34,11 @@ import org.apache.spark.storage.StorageLevel
 object ConnectedComponents {
 
   /** @param nodes (doc_id) — every vertex, including isolated ones.
-    *              PRECONDITION (implicit since r1, relied on by the r14
-    *              self-loop shape): edge endpoints ⊆ nodes — every
-    *              in-repo caller derives edges from the node set. The
-    *              pre-r14 shape silently ignored foreign endpoints;
-    *              passing them now would let them relay labels.
-    * @param edges (a_id, b_id) — undirected pairs
+    * @param edges (a_id, b_id) — undirected pairs. An edge with an
+    *              endpoint outside `nodes` is DROPPED (semi-joined away
+    *              before the rounds, as the pre-r14 shape ignored it):
+    *              a foreign vertex neither gets a label nor relays one
+    *              between two nodes.
     * @return (doc_id, label) with label = min doc_id of the component
     */
   def components(s: SparkSession, nodes: DataFrame, edges: DataFrame,
@@ -51,8 +50,19 @@ object ConnectedComponents {
     // pipeline to its non-adaptive plan (cached subtrees bypass AQE —
     // measured 1.5x slower here); the eager checkpoint runs it once
     // under AQE and truncates the lineage to the materialized rows.
-    val e = edges.localCheckpoint(true)
+    // The node semi-joins ride the same job. The two checkpoints also
+    // OBSERVE what the set-up needs (edge count, node count, initial
+    // label sum), so sizing and the fixpoint seed run no job of their
+    // own.
+    val eObs = org.apache.spark.sql.Observation("cc_edges")
+    val e = edges
+      .join(nodes.select(col("doc_id").as("a_id")), Seq("a_id"), "left_semi")
+      .join(nodes.select(col("doc_id").as("b_id")), Seq("b_id"), "left_semi")
+      .observe(eObs, count(lit(1)).as("n"))
+      .localCheckpoint(true)
+    val nObs = org.apache.spark.sql.Observation("cc_nodes")
     var labels = nodes.select(col("doc_id"), col("doc_id").as("label"))
+      .observe(nObs, count(lit(1)).as("n"), decimalSum.as("s"))
       .localCheckpoint(true)
     // r14 opt (guide §2.4, §3.1, measured ~0.7 s/round → ~0.35 s/round
     // on the LSH graph): three structural changes to the round loop.
@@ -73,9 +83,11 @@ object ConnectedComponents {
     //    EVERY round (measured ~1.2 s/round). The hash build is
     //    node-grain / partition count, the same bound the label state
     //    already has.
+    val nEdges = observed[Long](eObs, "n")(e.count())
+    val nNodes = observed[Long](nObs, "n")(labels.count())
     val parts = math.max(1L, math.min(
       s.sparkContext.defaultParallelism.toLong,
-      (e.count() * 2 + labels.count()) / 65536 + 1)).toInt
+      (nEdges * 2 + nNodes) / 65536 + 1)).toInt
     val sym = e.select(col("a_id").as("src"), col("b_id").as("dst"))
       .union(e.select(col("b_id").as("src"), col("a_id").as("dst")))
       .union(labels.select(col("doc_id").as("src"), col("doc_id").as("dst")))
@@ -88,25 +100,13 @@ object ConnectedComponents {
     // any id domain, no overflow at any realistic node count — so the
     // check is bit-reliable like the old per-row chg count it
     // replaces, but needs no `old` column carried through the round.
+    // The per-round sum rides the CHECKPOINT job via observe(), like
+    // the set-up values above, so each round runs ONE job instead of
+    // checkpoint + a separate convergence agg; labelSum is only the
+    // fallback.
     def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("label").cast("decimal(38,0)")),
-        lit(0).cast("decimal(38,0)"))).head().getDecimal(0)
-    // The per-round sum rides the CHECKPOINT job via observe()
-    // (CollectMetrics fires when the eager checkpoint materializes the
-    // plan — verified in this Spark build), so each round runs ONE job
-    // instead of checkpoint + a separate convergence agg. Falls back
-    // to the explicit agg if the observation does not surface.
-    def observedSum(obs: org.apache.spark.sql.Observation,
-                    df: DataFrame): java.math.BigDecimal =
-      try {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val v = Await.result(Future(obs.get), Duration(60, "s"))("s")
-        if (v == null) java.math.BigDecimal.ZERO
-        else v.asInstanceOf[java.math.BigDecimal]
-      } catch { case _: Throwable => labelSum(df) }
-    var prevSum = labelSum(labels)
+      df.agg(decimalSum).head().getDecimal(0)
+    var prevSum = observed[java.math.BigDecimal](nObs, "s")(labelSum(labels))
     var changed = true
     var i = 0
     while (changed && i < maxIter) {
@@ -131,11 +131,9 @@ object ConnectedComponents {
         p.join(look, p("label") === look("j_id"), "left")
           .select(p("doc_id"),
             least(p("label"), coalesce(col("j_lab"), p("label"))).as("label"))
-      }).observe(obs,
-          coalesce(sum(col("label").cast("decimal(38,0)")),
-            lit(0).cast("decimal(38,0)")).as("s"))
+      }).observe(obs, decimalSum.as("s"))
         .localCheckpoint(true)
-      val s2 = observedSum(obs, next)
+      val s2 = observed[java.math.BigDecimal](obs, "s")(labelSum(next))
       changed = s2.compareTo(prevSum) != 0
       prevSum = s2
       // previous rounds' checkpoint blocks become unreachable here and
@@ -155,4 +153,20 @@ object ConnectedComponents {
         s"(label sum still decreasing); raise maxIter — the graph has a longer chain than expected")
     labels
   }
+
+  private def decimalSum =
+    coalesce(sum(col("label").cast("decimal(38,0)")), lit(0).cast("decimal(38,0)"))
+
+  /** An `observe()` metric of an eager checkpoint that has run
+    * (CollectMetrics fires when the checkpoint materializes the plan —
+    * verified in this Spark build); `fallback` computes it with a job
+    * of its own if the observation does not surface. */
+  private def observed[T](obs: org.apache.spark.sql.Observation, name: String)
+                         (fallback: => T): T =
+    try {
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.duration.Duration
+      Await.result(Future(obs.get), Duration(60, "s"))(name).asInstanceOf[T]
+    } catch { case _: Throwable => fallback }
 }

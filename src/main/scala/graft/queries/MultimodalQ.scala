@@ -42,8 +42,7 @@ object MultimodalQ {
         .select("doc_id", "text").filter(col("doc_id") < 100)
       val base = s.conf.getOption("graft.mm.ingestBase")
         .getOrElse(graft.util.Scratch.dirFor("mm_bin", d))
-      val hconf = s.sparkContext.broadcast(
-        new graft.util.SerializableHadoopConf(s.sparkContext.hadoopConfiguration))
+      val hconf = graft.util.SerializableHadoopConf.broadcast(s.sparkContext)
       docs.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
         val root = new org.apache.hadoop.fs.Path(base)
         val fs = root.getFileSystem(hconf.value.value)

@@ -35,7 +35,6 @@ object StatsR10j {
     // either location or spread with one statistic.
     "q_lepage" -> ((s, d) => {
       val dm = DailyGrid.mean(s, d).select(col("event_type"), col("d"), col("y"))
-        .localCheckpoint(eager = true) // bounded day grid, 2 legs
       val pairs = dm.select(col("event_type").as("t1")).distinct()
         .join(dm.select(col("event_type").as("t2")).distinct(),
           col("t1") < col("t2"))
@@ -112,7 +111,6 @@ object StatsR10j {
     // Exact long comparisons; one double chain per pair row.
     "q_sign_test" -> ((s, d) => {
       val dm = DailyGrid.mean(s, d).select(col("event_type"), col("d"), col("y"))
-        .localCheckpoint(eager = true) // two join legs
       dm.select(col("event_type").as("t1"), col("d"),
           col("y").as("y1"))
         .join(dm.select(col("event_type").as("t2"), col("d"),

@@ -118,7 +118,6 @@ object StatsR10n {
     "q_passing_bablok" -> ((s, d) => {
       val dm = DailyGrid.mean(s, d)
         .select(col("event_type"), col("d"), col("y"))
-        .localCheckpoint(eager = true)
       val paired = dm.select(col("event_type").as("t1"), col("d"),
           col("y").as("x"))
         .join(dm.select(col("event_type").as("t2"), col("d"),

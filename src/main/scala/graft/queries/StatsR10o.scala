@@ -101,7 +101,6 @@ object StatsR10o {
     "q_siegel_slope" -> ((s, d) => {
       val pts = DailyGrid.mean(s, d)
         .select(col("event_type"), col("d"), col("y"), col("i"))
-        .localCheckpoint(eager = true) // two slope legs + intercept leg
       val sl = pts.select(col("event_type"), col("i").as("i1"),
           col("y").as("y1"))
         .join(pts.select(col("event_type"), col("i").as("i2"),

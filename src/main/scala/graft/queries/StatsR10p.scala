@@ -140,7 +140,6 @@ object StatsR10p {
     "q_sn_qn_scale" -> ((s, d) => {
       val pts = DailyGrid.mean(s, d)
         .select(col("event_type"), col("d"), col("y"), col("i"))
-        .localCheckpoint(eager = true)
       val diffs = pts.select(col("event_type"), col("i").as("i1"),
           col("y").as("y1"))
         .join(pts.select(col("event_type"), col("i").as("i2"),

@@ -21,7 +21,6 @@ object StatsR10w {
   /** Paired daily milli means for every ordered/unordered type pair. */
   private def paired(s: SparkSession, d: String): DataFrame = {
     val dm = DailyGrid.mean(s, d).select(col("event_type"), col("d"), col("y"))
-      .localCheckpoint(eager = true)
     dm.select(col("event_type").as("t1"), col("d"), col("y").as("x"))
       .join(dm.select(col("event_type").as("t2"), col("d"),
         col("y").as("yy")), "d")
@@ -83,7 +82,6 @@ object StatsR10w {
     "q_wasserstein" -> ((s, d) => {
       val dm = DailyGrid.mean(s, d)
         .select(col("event_type"), col("y"))
-        .localCheckpoint(eager = true)
       val pairs = dm.select(col("event_type").as("t1")).distinct()
         .join(dm.select(col("event_type").as("t2")).distinct(),
           col("t1") < col("t2"))
@@ -124,7 +122,6 @@ object StatsR10w {
     // location shifts hide.
     "q_bws_test" -> ((s, d) => {
       val dm = DailyGrid.mean(s, d).select(col("event_type"), col("d"), col("y"))
-        .localCheckpoint(eager = true)
       val pairs = dm.select(col("event_type").as("t1")).distinct()
         .join(dm.select(col("event_type").as("t2")).distinct(),
           col("t1") < col("t2"))

@@ -151,7 +151,6 @@ object StatsR10x {
     // trend plus the interval q_theil_sen alone doesn't give.
     "q_theilsen_ci" -> ((s, d) => {
       val pts = DailyGrid.mean(s, d)
-        .localCheckpoint(eager = true)
       val slopes = pts.select(col("event_type"), col("i").as("i1"),
           col("y").as("y1"))
         .join(pts.select(col("event_type"), col("i").as("i2"),

@@ -80,7 +80,6 @@ object StatsR9 {
     "q_macd" -> ((s, d) => {
       val idx = DailyGrid.ohlc(s, d)
         .select(col("event_type"), col("d"), col("i"), col("c"))
-        .localCheckpoint(eager = true) // bounded day grid, 2 legs
       val b = idx.select(col("event_type").as("et2"), col("i").as("j"),
         col("c").as("cj"))
       def emaW(alpha: Column, beta: Column): Column =

@@ -99,7 +99,6 @@ object StatsR9f {
     // alpha = k·(1 − A/B)/(k−1) is one double chain on one output row.
     "q_cronbach_alpha" -> ((s, d) => {
       val dm = DailyGrid.mean(s, d).select(col("event_type"), col("d"), col("y"))
-        .localCheckpoint(eager = true) // bounded day grid, 2 legs
       val k = dm.select(countDistinct("event_type")).first().getLong(0)
       val full = dm.groupBy("d").agg(count(lit(1)).as("nt"),
           sum("y").as("t"))
@@ -128,7 +127,6 @@ object StatsR9f {
     // products) — exact integers to the single division.
     "q_mood_median" -> ((s, d) => {
       val dm = DailyGrid.mean(s, d).select(col("event_type"), col("d"), col("y"))
-        .localCheckpoint(eager = true) // bounded day grid, 2 legs
       val pairs = dm.select(col("event_type").as("t1")).distinct()
         .join(dm.select(col("event_type").as("t2")).distinct(),
           col("t1") < col("t2"))

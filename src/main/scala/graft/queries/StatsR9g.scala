@@ -83,7 +83,6 @@ object StatsR9g {
     // from the exact group-size sums, z in one identical chain.
     "q_jonckheere" -> ((s, d) => {
       val dm = DailyGrid.mean(s, d).select(col("event_type"), col("y"))
-        .localCheckpoint(eager = true) // bounded day grid, 3 legs
       val j2 = dm.join(dm.select(col("event_type").as("et2"),
           col("y").as("y2")), col("event_type") < col("et2"))
         .agg(sum(when(col("y") < col("y2"), 2L)
@@ -106,7 +105,6 @@ object StatsR9g {
     // chain on the single output row.
     "q_icc" -> ((s, d) => {
       val dm = DailyGrid.mean(s, d).select(col("event_type"), col("d"), col("y"))
-        .localCheckpoint(eager = true) // bounded day grid, 2 legs
       val k = dm.select(countDistinct("event_type")).first().getLong(0)
       val full = dm.groupBy("d").agg(count(lit(1)).as("nt"),
           sum("y").as("t"), sum(col("y") * col("y")).as("yy"))

@@ -29,7 +29,6 @@ object StatsR9h {
     // odd N branches spelled identically as CASE in the oracle).
     "q_ansari_bradley" -> ((s, d) => {
       val dm = DailyGrid.mean(s, d).select(col("event_type"), col("d"), col("y"))
-        .localCheckpoint(eager = true) // bounded day grid, 2 legs
       val pairs = dm.select(col("event_type").as("t1")).distinct()
         .join(dm.select(col("event_type").as("t2")).distinct(),
           col("t1") < col("t2"))

@@ -141,7 +141,6 @@ object StatsR9j {
       val dm = DailyGrid.mean(s, d)
         .withColumn("dow", dayofweek(col("d")))
         .select(col("event_type"), col("dow"), col("d"), col("y"))
-        .localCheckpoint(eager = true) // bounded day grid, 2 legs
       val sS = dm.select(col("event_type"), col("dow"),
           col("d").as("da"), col("y").as("ya"))
         .join(dm.select(col("event_type"), col("dow"),

@@ -52,7 +52,6 @@ object StatsR9k {
     // T = U/(nmN) − (4mn−1)/(6N) is one identical chain.
     "q_cvm_test" -> ((s, d) => {
       val dm = DailyGrid.mean(s, d).select(col("event_type"), col("d"), col("y"))
-        .localCheckpoint(eager = true) // bounded day grid, 2 legs
       val pairs = dm.select(col("event_type").as("t1")).distinct()
         .join(dm.select(col("event_type").as("t2")).distinct(),
           col("t1") < col("t2"))

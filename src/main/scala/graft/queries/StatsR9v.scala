@@ -51,7 +51,6 @@ object StatsR9v {
     // exact counts, ONE division.
     "q_cliff_delta" -> ((s, d) => {
       val dm = DailyGrid.mean(s, d).select(col("event_type"), col("y"))
-        .localCheckpoint(eager = true)
       dm.select(col("event_type").as("t1"), col("y").as("x"))
         .join(dm.select(col("event_type").as("t2"), col("y").as("yy")),
           col("t1") < col("t2"))
@@ -95,7 +94,6 @@ object StatsR9v {
     // 2Sxy/(n₁n₂) in one identical chain.
     "q_mmd_cauchy" -> ((s, d) => {
       val dm = DailyGrid.mean(s, d).select(col("event_type"), col("y"))
-        .localCheckpoint(eager = true) // 3 pair legs
       def kern(a: org.apache.spark.sql.Column,
           b: org.apache.spark.sql.Column) =
         round(lit(1e19) / (lit(1e10)
@@ -130,7 +128,6 @@ object StatsR9v {
     // bounded pair sums, one chain.
     "q_energy_distance" -> ((s, d) => {
       val dm = DailyGrid.mean(s, d).select(col("event_type"), col("y"))
-        .localCheckpoint(eager = true) // 3 pair legs
       val within = dm.select(col("event_type").as("t"), col("y").as("a"))
         .join(dm.select(col("event_type").as("t"), col("y").as("b")),
           "t")

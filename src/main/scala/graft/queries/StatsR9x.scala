@@ -140,7 +140,6 @@ object StatsR9x {
       import s.implicits._
       val base = DailyGrid.mean(s, d)
         .select(col("event_type"), col("i"), col("y"))
-        .localCheckpoint(eager = true)
       val mom = base.groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("y").as("sy"),
           sum(col("y") * col("y")).as("syy"))

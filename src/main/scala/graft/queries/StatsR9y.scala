@@ -122,7 +122,6 @@ object StatsR9y {
       }
       val base = DailyGrid.mean(s, d)
         .select(col("event_type"), col("d"), col("y"))
-        .localCheckpoint(eager = true)
       val (o1, r1b) = pick(base)
       val r1 = r1b.localCheckpoint(eager = true)
       val (o2, r2b) = pick(r1)
@@ -206,7 +205,6 @@ object StatsR9y {
       import s.implicits._
       val base = DailyGrid.mean(s, d)
         .select(col("event_type"), col("i"), col("y"))
-        .localCheckpoint(eager = true)
       val mom = base.groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("y").as("sy"),
           sum(col("y") * col("y")).as("syy"))

@@ -170,7 +170,6 @@ object StatsR9zf {
     "q_kendall_w" -> ((s, d) => {
       val dm = DailyGrid.mean(s, d)
         .select(col("event_type"), col("d"), col("y"))
-        .localCheckpoint(eager = true)
       val wv = Window.partitionBy("event_type").orderBy("y")
       val vb = dm.groupBy("event_type", "y")
         .agg(count(lit(1)).as("cnt"))

@@ -94,7 +94,7 @@ object StatsR9zq {
     // 1e6·3·d² > q²·1e6·(2n)²·k(k+1)/(12n)·3 — spelled identically
     // both engines (derivation in the row; q=2.728).
     "q_nemenyi" -> ((s, d) => {
-      val dm = DailyGrid.mean(s, d).localCheckpoint(eager = true)
+      val dm = DailyGrid.mean(s, d)
       val rk = dm.select(col("d").as("d1"), col("event_type").as("t1"),
           col("y").as("y1"))
         .join(dm.select(col("d").as("d1"), col("event_type").as("t2"),

@@ -126,7 +126,7 @@ object StatsR9zt {
     // (ties excluded, stated): π_i = W_i/(C_i/2) from the uniform
     // start, normalized to Σπ = 1.
     "q_bradley_terry" -> ((s, d) => {
-      val dm = DailyGrid.mean(s, d).localCheckpoint(eager = true)
+      val dm = DailyGrid.mean(s, d)
       val pairs = dm.select(col("d").as("dd"), col("event_type")
           .as("t1"), col("y").as("y1"))
         .join(dm.select(col("d").as("dd"), col("event_type").as("t2"),

@@ -73,7 +73,6 @@ object StatsR9zw {
       import s.implicits._
       val base = DailyGrid.mean(s, d)
         .select(col("event_type"), col("i"), col("y"))
-        .localCheckpoint(eager = true)
       val lags = (-3L to 3L).toDF("lag")
       val j = base.select(col("event_type").as("t1"), col("i"),
           col("y").as("y1"))

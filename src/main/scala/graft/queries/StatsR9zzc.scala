@@ -47,7 +47,6 @@ object StatsR9zzc {
     "q_twoway_fe" -> ((s, d) => {
       val dm = DailyGrid.mean(s, d)
         .select(col("event_type").as("t"), col("d"), col("y"))
-        .localCheckpoint(eager = true)
       val mt = dm.groupBy("t").agg(count(lit(1)).as("nt"),
         sum("y").as("st"))
       val md = dm.groupBy("d").agg(count(lit(1)).as("ndd"),
@@ -80,7 +79,6 @@ object StatsR9zzc {
     "q_james_stein" -> ((s, d) => {
       val dm = DailyGrid.mean(s, d)
         .select(col("event_type").as("t"), col("y"))
-        .localCheckpoint(eager = true)
       val mt = dm.groupBy("t").agg(count(lit(1)).as("nt"),
           sum("y").as("st"),
           sum(col("y") * col("y")).as("stt"))

@@ -5,6 +5,7 @@ import java.util.{Map => JMap, UUID}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
@@ -13,6 +14,8 @@ import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterF
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+
+import graft.util.SerializableHadoopConf
 
 /** Thrown when an optimistic commit loses the race for its target
   * version: another writer committed the same version first. The
@@ -87,6 +90,15 @@ class ConcurrentWriteException(msg: String) extends RuntimeException(msg)
   * commit messages, versioned CAS publish, abort) are the operator.
   * Supported column types: long/int/double/string (text timestamp
   * formats are a config surface, excluded as in q_io_roundtrip).
+  *
+  * EXECUTOR CONF: the task-side writers open their files with the
+  * session's Hadoop conf (custom `fs.*.impl`, credentials), taken ONCE
+  * per write as a broadcast snapshot — when a batch write is planned,
+  * and once when a streaming query starts, so a conf change made while
+  * a stream runs reaches its writers only after a restart. The writer
+  * factories carry only the broadcast handle, never the conf (~100 KB
+  * serialized): a factory goes into the task binary of every
+  * (micro-)batch, and every task deserializes it.
   */
 class StagedCommitSink extends TableProvider {
   override def supportsExternalMetadata(): Boolean = true
@@ -199,6 +211,12 @@ object StagedCommitSink {
 private class StagedTable(schema: StructType, path: String, retain: Int)
     extends Table with SupportsWrite {
   require(path != null, "StagedCommitSink requires option(\"path\", ...)")
+
+  // The writers' Hadoop conf, broadcast once per table instance: Spark
+  // builds one table per batch write and one per streaming-query start.
+  private lazy val confBc: Broadcast[SerializableHadoopConf] =
+    SerializableHadoopConf.broadcast(org.apache.spark.SparkContext.getOrCreate())
+
   override def name(): String = s"staged_commit($path)"
   override def schema(): StructType = schema
   override def capabilities(): java.util.Set[TableCapability] =
@@ -209,17 +227,18 @@ private class StagedTable(schema: StructType, path: String, retain: Int)
       override def truncate(): WriteBuilder = this
       override def build(): Write = new Write {
         override def toBatch: BatchWrite =
-          new StagedBatchWrite(path, info.schema(), retain)
+          new StagedBatchWrite(path, info.schema(), retain, confBc)
         override def toStreaming: StreamingWrite =
-          new StagedStreamingWrite(path, info.schema())
+          new StagedStreamingWrite(path, info.schema(), confBc)
       }
     }
 }
 
 private case class StagedFileMessage(file: String) extends WriterCommitMessage
 
-private class StagedBatchWrite(path: String, schema: StructType,
-                               retain: Int) extends BatchWrite {
+private class StagedBatchWrite(path: String, schema: StructType, retain: Int,
+                               confBc: Broadcast[SerializableHadoopConf])
+    extends BatchWrite {
   // sanity-check the schema ONCE at planning, not per row
   schema.fields.foreach { f =>
     f.dataType match {
@@ -243,9 +262,7 @@ private class StagedBatchWrite(path: String, schema: StructType,
   }
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new StagedWriterFactory(path, stagingName, schema,
-      new graft.util.SerializableHadoopConf(
-        org.apache.spark.SparkContext.getOrCreate().hadoopConfiguration))
+    new StagedWriterFactory(path, stagingName, schema, confBc)
 
   private def genName = "gen-" + stagingName.stripPrefix(".staging-")
 
@@ -359,10 +376,10 @@ private class StagedBatchWrite(path: String, schema: StructType,
 }
 
 private class StagedWriterFactory(path: String, stagingName: String, schema: StructType,
-                                  conf: graft.util.SerializableHadoopConf)
+                                  confBc: Broadcast[SerializableHadoopConf])
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new StagedCsvWriter(path, stagingName, schema, partitionId, taskId, conf)
+    new StagedCsvWriter(path, stagingName, schema, partitionId, taskId, confBc)
 }
 
 /** STREAMING write through the same staged-commit protocol, keyed by
@@ -377,7 +394,8 @@ private class StagedWriterFactory(path: String, stagingName: String, schema: Str
   * double-count those rows), and rewrites the `_epochs` manifest
   * (temp + atomic FileContext rename) from the directories actually
   * present. Readers union the manifest's epochs. */
-private class StagedStreamingWrite(path: String, schema: StructType)
+private class StagedStreamingWrite(path: String, schema: StructType,
+                                   confBc: Broadcast[SerializableHadoopConf])
     extends StreamingWrite {
   schema.fields.foreach { f =>
     f.dataType match {
@@ -391,8 +409,7 @@ private class StagedStreamingWrite(path: String, schema: StructType)
   private def fs = new Path(path).getFileSystem(conf)
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new StagedStreamingWriterFactory(path, schema,
-      new graft.util.SerializableHadoopConf(conf))
+    new StagedStreamingWriterFactory(path, schema, confBc)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val root = new Path(path)
@@ -430,11 +447,11 @@ private class StagedStreamingWrite(path: String, schema: StructType)
 }
 
 private class StagedStreamingWriterFactory(path: String, schema: StructType,
-                                           conf: graft.util.SerializableHadoopConf)
+                                           confBc: Broadcast[SerializableHadoopConf])
     extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
-    new StagedCsvWriter(path, s".staging-epoch-$epochId", schema, partitionId, taskId, conf)
+    new StagedCsvWriter(path, s".staging-epoch-$epochId", schema, partitionId, taskId, confBc)
 }
 
 /** One staged CSV file per task attempt; distinct attempt ids write
@@ -442,12 +459,12 @@ private class StagedStreamingWriterFactory(path: String, schema: StructType,
   * winner's output. */
 private class StagedCsvWriter(path: String, stagingName: String, schema: StructType,
                               partitionId: Int, taskId: Long,
-                              conf: graft.util.SerializableHadoopConf)
+                              confBc: Broadcast[SerializableHadoopConf])
     extends DataWriter[InternalRow] {
 
   private val file = new Path(new Path(path, stagingName),
     f"part-$partitionId%05d-$taskId.csv")
-  private val fs = file.getFileSystem(conf.value)
+  private val fs = file.getFileSystem(confBc.value.value)
   private val out = new java.io.BufferedWriter(
     new java.io.OutputStreamWriter(fs.create(file, true), "UTF-8"))
 

@@ -10,7 +10,8 @@ import graft.sinks.StagedCommitSink
 
 /** The staged-commit DSv2 sink's transactional semantics: atomic
   * generation swap on commit, prior-generation survival on job abort,
-  * superseded-generation GC, and byte-exact string quoting. */
+  * superseded-generation GC, byte-exact string quoting, and the
+  * writers' Hadoop conf arriving as a broadcast. */
 class DSv2SinkSpec extends AnyFunSuite with SparkFixture {
 
   private def freshPath(tag: String): String =
@@ -202,7 +203,7 @@ class DSv2SinkSpec extends AnyFunSuite with SparkFixture {
 
   // ---- optimistic concurrency + commit-log authority (r12 task 3) ----
 
-  private def newBatchWrite(path: String) = {
+  private def newWrite(path: String) = {
     import scala.jdk.CollectionConverters._
     val sch = schema
     val table = new StagedCommitSink()
@@ -214,8 +215,10 @@ class DSv2SinkSpec extends AnyFunSuite with SparkFixture {
       override def queryId() = java.util.UUID.randomUUID().toString
       override def schema() = sch
     }
-    table.newWriteBuilder(info).build().toBatch
+    table.newWriteBuilder(info).build()
   }
+
+  private def newBatchWrite(path: String) = newWrite(path).toBatch
 
   private def writeOneRow(bw: org.apache.spark.sql.connector.write.BatchWrite,
                           id: Long, tag: String) = {
@@ -295,4 +298,104 @@ class DSv2SinkSpec extends AnyFunSuite with SparkFixture {
       .collect().head.getString(2) === "new")
     assert(!new java.io.File(path, "_log").exists())
   }
+
+  // ---- the writers' Hadoop conf travels as a broadcast ----
+
+  test("writer factories carry no Hadoop conf: each serializes under 16 KB") {
+    val write = newWrite(freshPath("factory_size"))
+    val info = new org.apache.spark.sql.connector.write.PhysicalWriteInfo {
+      override def numPartitions() = 2
+    }
+    def serializedBytes(o: AnyRef): Int = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      try out.writeObject(o) finally out.close()
+      bytes.size()
+    }
+    // a session conf inside a factory is ~100 KB, and the factory goes
+    // into the task binary of every (micro-)batch
+    val batch = serializedBytes(write.toBatch.createBatchWriterFactory(info))
+    val stream = serializedBytes(write.toStreaming.createStreamingWriterFactory(info))
+    assert(batch < 16 * 1024, s"batch writer factory: $batch bytes")
+    assert(stream < 16 * 1024, s"streaming writer factory: $stream bytes")
+  }
+
+  test("the writers resolve their file system from the session's Hadoop conf") {
+    import org.apache.spark.sql.streaming.Trigger
+    import spark.implicits._
+    val hc = spark.sparkContext.hadoopConfiguration
+    val scheme = ProbeFileSystem.Scheme
+    val keys = Map(
+      s"fs.$scheme.impl" -> classOf[ProbeFileSystem].getName,
+      s"fs.$scheme.impl.disable.cache" -> "true",
+      s"fs.AbstractFileSystem.$scheme.impl" -> classOf[ProbeFs].getName)
+    keys.foreach { case (k, v) => hc.set(k, v) }
+    def partsCreated(): Seq[String] = {
+      val names = Seq.newBuilder[String]
+      var n = ProbeFileSystem.created.poll()
+      while (n != null) { names += n; n = ProbeFileSystem.created.poll() }
+      names.result().filter(_.startsWith("part-"))
+    }
+    try {
+      // the scheme resolves only through fs.<scheme>.impl, and with
+      // the cache off every writer looks it up in the conf it was given
+      val schema2 = StructType(Seq(
+        StructField("id", LongType), StructField("s", StringType)))
+      val in = freshPath("probe_in")
+      Seq((1L, "a"), (2L, "b")).toDF("id", "s").coalesce(1)
+        .write.mode("append").parquet(in)
+      val streamSink = s"$scheme://" + freshPath("probe_stream")
+      partsCreated()
+      spark.readStream.schema(schema2).parquet(in)
+        .writeStream.format("graft.sinks.StagedCommitSink")
+        .option("path", streamSink)
+        .option("checkpointLocation", freshPath("probe_ck"))
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      assert(partsCreated().nonEmpty, "streaming part files bypassed the probe")
+      assert(StagedCommitSink.readEpochs(spark, streamSink, schema2)
+        .orderBy("id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+        === Seq((1L, "a"), (2L, "b")))
+
+      val batchSink = s"$scheme://" + freshPath("probe_batch")
+      writeDf(Seq((3L, 3.5, "c"), (4L, 4.5, "d")).toDF("id", "v", "s"), batchSink)
+      assert(partsCreated().nonEmpty, "batch part files bypassed the probe")
+      assert(StagedCommitSink.read(spark, batchSink, schema)
+        .orderBy("id").collect().map(_.getLong(0)).toSeq === Seq(3L, 4L))
+    } finally keys.keys.foreach(hc.unset)
+  }
 }
+
+/** A local file system under a scheme of its own that records the name
+  * of every file it creates. */
+class ProbeFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+  import org.apache.hadoop.fs.permission.FsPermission
+  import org.apache.hadoop.util.Progressable
+
+  override def getUri: java.net.URI = java.net.URI.create(s"${ProbeFileSystem.Scheme}:///")
+  override def getScheme: String = ProbeFileSystem.Scheme
+
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    ProbeFileSystem.created.add(f.getName)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+                      bufferSize: Int, replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    ProbeFileSystem.created.add(f.getName)
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object ProbeFileSystem {
+  val Scheme = "graftprobe"
+  val created = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+}
+
+/** [[ProbeFileSystem]] for `FileContext`, which the sink's commit uses. */
+class ProbeFs(uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
+    extends org.apache.hadoop.fs.DelegateToFileSystem(
+      uri, new ProbeFileSystem, conf, ProbeFileSystem.Scheme, false)

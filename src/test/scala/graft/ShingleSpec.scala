@@ -285,6 +285,18 @@ class ShingleSpec extends AnyFunSuite with SparkFixture {
     assert(got.size === 100 && got.values.forall(_ === 0L))
   }
 
+  test("an edge endpoint outside the node set is dropped, not a label relay") {
+    import graft.operators.ConnectedComponents
+    import spark.implicits._
+    // 99 is not a node: the edges (2, 99) and (99, 3) must not join 3
+    // to the {1, 2} component through it, and 99 gets no label
+    val nodes = Seq(1L, 2L, 3L).toDF("doc_id")
+    val edges = Seq((1L, 2L), (2L, 99L), (99L, 3L)).toDF("a_id", "b_id")
+    val got = ConnectedComponents.components(spark, nodes, edges)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
+  }
+
   test("jump=true equals jump=false on the near-dup corpus graph") {
     import graft.operators.ConnectedComponents
     val nodes = docs.select("doc_id")
